@@ -229,7 +229,16 @@ object NaiveBayes {
     * union aggregate. Carry columns ride the base-part stream (exactly
     * one base row per (doc, lang)) and are recovered with
     * `first(ignoreNulls)` — deterministic because the matched stream
-    * carries only nulls. */
+    * carries only nulls.
+    *
+    * Requires `idCol` unique within `batch`. The aggregate keys on
+    * (doc_id, lang), so rows sharing an id merge into one score: their
+    * grams pool into one per-doc count, and each row still adds its own
+    * base part (prior + T·floor over the pooled total T), so the base
+    * terms are double-counted; `first(ignoreNulls)` may also carry
+    * either row's columns. Every caller scores a batch keyed by doc_id,
+    * so this is documented, not checked: a check would cost one more
+    * job per scoring call. */
   private def scoreGrid(batch: DataFrame, textCol: String, idCol: String,
       m: NbcModel, carry: Seq[String]): DataFrame = {
     val cl = classSide(m)

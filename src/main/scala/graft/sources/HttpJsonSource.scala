@@ -194,12 +194,17 @@ class HttpJsonSource(
     throw new IllegalStateException("unreachable")
   }
 
-  /** Fetch + parse into a one-row DataFrame of the document. */
+  /** Fetch + parse into a one-row DataFrame of the document. Parsing is
+    * FAILFAST: a body that is not one well-formed JSON document (an HTML
+    * error page served as 200, a truncated response) fails the pass at
+    * the document's first read, before any state or sink write. The
+    * default PERMISSIVE mode would turn it into an all-null row whose
+    * empty batches make the next diff delete every node. */
   def load(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val body = fetchBody()
     val reader = schema.fold(spark.read)(spark.read.schema(_))
-    reader.json(Seq(body).toDS)
+    reader.option("mode", "FAILFAST").json(Seq(body).toDS)
   }
 }
 

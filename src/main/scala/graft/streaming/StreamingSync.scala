@@ -21,7 +21,10 @@ import graft.state.SnapshotStore
 class StreamingSync(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
 
   /** Start incremental sync of a document stream (e.g.
-    * `spark.readStream.schema(Schemas.hcpDocument).json(dir)`).
+    * `spark.readStream.schema(Schemas.hcpDocument)
+    * .option("mode", "FAILFAST").json(dir)` — FAILFAST so a malformed
+    * file stops the stream instead of syncing as an all-null snapshot
+    * that deletes every node).
     *
     * Snapshot-diff semantics require each micro-batch to be ONE complete
     * upstream snapshot: configure the source to deliver at most one

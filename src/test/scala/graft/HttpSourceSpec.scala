@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Schemas
-import graft.pipeline.{HcpIntegration, SyncDriver}
+import graft.pipeline.{CreateNode, CreateRelation, HcpIntegration, SyncDriver}
 import graft.sink.GraphSink
 import graft.sources.{HttpJsonSource, HttpStatusException, TokenProvider}
 import graft.state.SnapshotStore
@@ -18,7 +18,8 @@ import graft.state.SnapshotStore
 /** [[HttpJsonSource]] / [[TokenProvider]] against a local stub HTTP server
   * (reference `main.go:84-145`): bearer header, OAuth2 client-credentials
   * form, token caching + expiry + 401-invalidate refresh, non-200 paths,
-  * and the golden HCP pipeline end-to-end from the live endpoint. */
+  * the golden HCP pipeline end-to-end from the live endpoint, and a
+  * malformed 200 body failing the pass before state or sink change. */
 class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestBase.spark
 
@@ -222,5 +223,40 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sink.readNodes("bucket")
       .filter(org.apache.spark.sql.functions.col("external_id") === "b1")
       .collect().head.getAs[String]("name") === "base-img-live")
+  }
+
+  test("unparseable document fails the pass; store and sink stay unchanged") {
+    validToken = "tok-1"
+    docBody = HcpFixture.json
+    val root = java.nio.file.Files.createTempDirectory("graft-http-bad").toString
+    val store = new SnapshotStore(spark, s"$root/state")
+    val sink = new GraphSink(spark, s"$root/graph")
+    val driver = new SyncDriver(spark, store, sink)
+    val spec = HcpIntegration.spec("hcp-bad",
+      HttpJsonSource.loader(s"$base/api/doc", Some(oauth()),
+        Some(Schemas.hcpDocument)))
+    assert(driver.run(spec)("buckets") === ((2L, 0L)))
+
+    // every function's committed state plus its node or edge table
+    def image(): Seq[Seq[String]] = spec.functions.flatMap { fn =>
+      val out = fn.kind match {
+        case CreateNode(label) => sink.readNodes(label)
+        case CreateRelation(rt, a, b, _) => sink.readEdges(s"${rt}__${a}__$b")
+      }
+      Seq(store.read(spec.key, fn.name), out)
+        .map(_.collect().map(_.toString).sorted.toSeq)
+    }
+    val before = image()
+    assert(before.exists(_.nonEmpty))
+
+    // served with status 200: an HTML error page and a truncated document
+    // would parse PERMISSIVE as an all-null row and delete every node
+    for (bad <- Seq("<html>502 Bad Gateway</html>",
+        HcpFixture.json.take(HcpFixture.json.length / 2))) {
+      docBody = bad
+      intercept[Exception](driver.run(spec))
+      assert(image() === before, s"state or sink changed on body: $bad")
+    }
+    docBody = HcpFixture.json
   }
 }
