@@ -57,8 +57,11 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shared builder: shuffle partitions derived from the fixture's
     // input bytes (floored at the core count) — the same sizing Verify
-    // and RungLab run, so bench numbers carry the engine's real shape
+    // runs, so bench numbers carry the engine's real shape
     val spark = GraftSession.build(sfDir, cpus.toInt)
+    // per-slot profile (planning, jobs, stages, tasks, shuffle, spill,
+    // GC, JIT), attributed by job tag — the "profile" map below
+    val profile = Profile.install(spark)
     FixtureProbe.check(spark, sfDir) // names drifted columns up front
     // Warm the session (job machinery, codegen, file index) so the first
     // timed query doesn't absorb startup cost. Building every query's
@@ -104,13 +107,14 @@ object Bench {
     if (fullBattery) SparkEntry.planningOnly = false
     // Timed slots: memo builds first (dependency order), then the
     // queries (sorted). Each memo thunk invokes the family accessor —
-    // exactly the eager work the warm phase used to do.
-    val slots: Seq[(String, () => Unit)] =
+    // exactly the eager work the warm phase used to do. A query slot
+    // returns its row count for the profile; a memo slot has none.
+    val slots: Seq[(String, () => Option[Long])] =
       (if (fullBattery) SparkEntry.memoBuilders.map { case (n, b) =>
-        (s"__memo:$n", () => b(spark, sfDir))
+        (s"__memo:$n", () => { b(spark, sfDir); None })
       } else Seq.empty) ++
         ordered.map { case (n, fn) =>
-          (n, () => { fn(spark, sfDir).count(); () })
+          (n, () => Some(fn(spark, sfDir).count()))
         }
     // JIT the probe before any reading matters
     (0 until 20).foreach(_ => cpuProbeNanos())
@@ -124,7 +128,7 @@ object Bench {
     probes(0) = cpuProbeNanos()._1
     val results = slots.zipWithIndex.map { case ((name, run), i) =>
       val t0 = System.nanoTime()
-      try { run() } catch {
+      try profile.slot(name)(run()) catch {
         case e: Throwable =>
           failed ::= name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -135,6 +139,12 @@ object Bench {
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // drain once, after the loop, so every slot's events are counted
+    profile.drain()
+    val profiled = results.map { case (k, _) => k -> profile.record(k) }
+    val profileJson = profiled.map { case (k, r) => s"\"" + k + "\":" + r.json }
+      .mkString("{", ",", "}")
+    val records = profiled.map(_._2)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val failedJson = failed.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Locale-pinned formatting: the f interpolator uses the JVM default
@@ -181,7 +191,7 @@ object Bench {
     // the same builds uncharged (OPTIMIZATION_r17.md "Memo accounting").
     val memoSec = results.filter(_._1.startsWith("__memo:")).map(_._2).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","memo_sec":${f3(memoSec)},"queries":$qs,"failed":$failedJson,"forensics":$forensics,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","memo_sec":${f3(memoSec)},"queries":$qs,"profile":$profileJson,"failed":$failedJson,"forensics":$forensics,"sf":"$sfDir"}"""
     println(line)
     // The per-query line is one stdout-tail truncation away from being
     // lost to the driver's archiving (it cost round 16 its PERF table) —
@@ -200,7 +210,16 @@ object Bench {
     val top5 = results.sortBy(-_._2).take(5)
       .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"summary","total":${f3(total)},"memo_sec":${f3(memoSec)},"n":${results.size},"failed":$failedJson,"top5":$top5,"forensics":$forensics,"sf":"$sfDir"}""")
+    val top5Jobs = profiled.sortBy(-_._2.jobs).take(5)
+      .map { case (k, r) => s"\"" + k + "\":" + r.jobs }
+      .mkString("{", ",", "}")
+    val profileSummary =
+      s""""jobs":${records.map(_.jobs).sum},""" +
+        s""""tasks":${records.map(_.tasks).sum},""" +
+        s""""shuffle_write_bytes":${records.map(_.shuffleWriteBytes).sum},""" +
+        s""""unattributed_jobs":${profile.unattributedJobs},""" +
+        s""""top5_jobs":$top5Jobs"""
+    println(s"""{"metric":"summary","total":${f3(total)},"memo_sec":${f3(memoSec)},"n":${results.size},"failed":$failedJson,"top5":$top5,$profileSummary,"forensics":$forensics,"sf":"$sfDir"}""")
     // ---- floor ratchet (round-16, VERDICT task 7) --------------------
     // At the gate scale, emit the NEXT floor file as a candidate: per
     // query the min of this run's time and the existing floor (so floors

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE session builder Bench / Verify / RungLab share, so every
+/** The ONE session builder Bench, Verify and the plan tools share, so every
   * gate and every scale rung runs the same session shape — and the one
   * place the engine sizes its shuffle.
   *
@@ -54,7 +54,7 @@ object GraftSession {
     * partitions, AQE on, UTC, nanos back-compat, UI off. */
   def build(sfDir: String, cores: Int): SparkSession = {
     val parts = derivedShufflePartitions(sfDir, cores)
-    // receipt on stderr (stdout carries the Bench/RungLab JSON): every
+    // receipt on stderr (stdout carries the Bench JSON): every
     // gate and rung run records the partition count it actually used
     System.err.println(s"[graft-session] sfDir=$sfDir " +
       s"bytes=${inputBytes(sfDir)} shufflePartitions=$parts")

@@ -9,6 +9,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // a misspelt name would otherwise dump nothing for it, silently
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared builder (input-byte-derived shuffle partitions): the gate
     // runs the same session shape Bench and the scale rungs run

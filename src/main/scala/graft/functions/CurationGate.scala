@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * langId(text) === lang` as ONE boolean expression computed in ONE pass
   * over the raw UTF-8 bytes.
   *
-  * Why fusion (measured, `tools/PerfLab` @ sf0.1): `FilterExec` codegen
+  * Why fusion (measured @ sf0.1, repeated warm runs): `FilterExec` codegen
   * performs no subexpression elimination, so the composed three-predicate
   * filter re-tokenizes the document for every predicate — even with the
   * scorers individually fused ([[TokenSetCount]]) the conjunction costs

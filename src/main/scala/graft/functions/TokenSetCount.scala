@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fixed word set, in ONE imperative pass over the raw UTF-8 bytes — the
   * fused form of `CountInSet(wsTokens(lower(text)), words)`.
   *
-  * Why it exists (measured, `tools/PerfLab filter_lang` @ sf0.1): the
+  * Why it exists (measured on `filter_lang` @ sf0.1): the
   * composed form pays, per row per predicate, a full-text lowercase copy,
   * a regex `Pattern.compile("\\s+")` inside `UTF8String.split`, and a
   * token-array allocation — and `FilterExec` codegen performs no

@@ -232,7 +232,7 @@ object Dedup {
     contaminationReport(tg, broadcast(bg))
   }
 
-  // Shape note (measured, sf0.1, warm — tools/PerfLab decont_*): when train
+  // Shape note (measured, sf0.1, warm runs of the decont_* queries): when train
   // and bench are SPLITS OF ONE CORPUS it is tempting to tokenize once and
   // branch, but every sharing mechanism measured WORSE than the pre-filtered
   // two-stream form above (2.2 s): carried-split-tag + repartition(s)

@@ -524,7 +524,7 @@ object Transforms {
     * side only combines when a task sees multiple rows per (group,
     * bucket), so width must exceed value-range ÷ rows-per-task or the
     * "aggregate" shuffles nearly raw rows. Measured at sf0.1 (600k rows,
-    * ~10M-cent range, WmLab): W=1024 → 30.5k buckets, near-zero collapse,
+    * ~10M-cent range, repeated warm runs): W=1024 → 30.5k buckets, near-zero collapse,
     * 1.7 s warm; W=65536 → ~480 buckets, full in-task collapse, 1.35 s —
     * while the crossing sliver stays a few thousand rows. The same
     * arithmetic governs any scale: pick W ≈ range·tasks ÷ rows, err wide

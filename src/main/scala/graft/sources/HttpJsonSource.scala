@@ -199,10 +199,14 @@ class HttpJsonSource(
     * error page served as 200, a truncated response) fails the pass at
     * the document's first read, before any state or sink write. The
     * default PERMISSIVE mode would turn it into an all-null row whose
-    * empty batches make the next diff delete every node. */
+    * empty batches make the next diff delete every node. A blank body
+    * (an empty 200, a 204) is rejected before parsing: even FAILFAST
+    * reads it as zero rows, with the same effect. */
   def load(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val body = fetchBody()
+    if (body.isBlank)
+      throw new IllegalStateException(s"GET $url returned a blank body")
     val reader = schema.fold(spark.read)(spark.read.schema(_))
     reader.option("mode", "FAILFAST").json(Seq(body).toDS)
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias,
   AttributeReference, Cast, ExprId, Expression, Literal, Pmod,
   Remainder, SparkPartitionID}
@@ -168,14 +167,9 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    // the Bench/Verify session shape, so the audited plans are theirs
+    val spark = graft.GraftSession.build(sfDir, cpus)
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     var errors = 0

@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Bridge into `private[sql]` Column ↔ Catalyst-Expression converters.
   *
@@ -70,4 +73,15 @@ object GraftSqlBridge {
       session, None, None)
     (classic.Dataset.ofRows(session, fresh), n)
   }
+
+  /** Block until every listener has processed every event posted so far
+    * (`listenerBus` is `private[spark]`): a reader of listener-built
+    * counters, such as [[graft.Profile]], sees complete numbers. */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** The `QueryExecution` an execution-end event carries (`qe` is
+    * `private[sql]`), whose planning tracker times the query's phases. */
+  def queryExecution(e: SparkListenerSQLExecutionEnd): Option[QueryExecution] =
+    Option(e.qe)
 }

@@ -250,9 +250,11 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(before.exists(_.nonEmpty))
 
     // served with status 200: an HTML error page and a truncated document
-    // would parse PERMISSIVE as an all-null row and delete every node
+    // would parse PERMISSIVE as an all-null row, and an empty or
+    // whitespace-only body as zero rows even under FAILFAST; either
+    // would delete every node
     for (bad <- Seq("<html>502 Bad Gateway</html>",
-        HcpFixture.json.take(HcpFixture.json.length / 2))) {
+        HcpFixture.json.take(HcpFixture.json.length / 2), "", "   \n")) {
       docBody = bad
       intercept[Exception](driver.run(spec))
       assert(image() === before, s"state or sink changed on body: $bad")
