@@ -67,15 +67,10 @@ object Reconcile {
   /** Delta pair, reference `Reconcile` return shape (`recon.go:40`). */
   case class Delta(toCreate: DataFrame, toDelete: DataFrame)
 
-  /** R1 — snapshot diff. `passthrough = true` is the relation mode
-    * (reference `recon.go:42-44`): everything is toCreate, nothing is
-    * deleted, state untouched — edges are append/merge-only (R4). */
-  def diff(batch: DataFrame, state: DataFrame,
-      passthrough: Boolean = false): Delta = {
-    if (passthrough) {
-      return Delta(batch, batch.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), Schemas.deleteRecord))
-    }
+  /** R1 — snapshot diff. (The reference's relation mode, `recon.go:42-44`,
+    * needs no diff: every edge is created and nothing is deleted, so a
+    * caller passes the batch straight to the merge-only sink.) */
+  def diff(batch: DataFrame, state: DataFrame): Delta = {
     val cls = classified(batch, state)
     val toCreate = cls.filter(col("op") === OpCreate)
       .select(batch.columns.map(c => col(s"b.`$c`")): _*)

@@ -35,13 +35,6 @@ class ReconcileSpec extends AnyFunSuite {
     assert(delta.toDelete.columns.toSeq === Seq("external_id"))
   }
 
-  test("passthrough mode: everything creates, nothing deletes (R4)") {
-    val edges = Seq(("a", "b"), ("c", "d")).toDF("a_id", "b_id")
-    val d = Reconcile.diff(edges, stateOf(batchOf("x" -> "t")),
-      passthrough = true)
-    assert(d.toCreate.count() === 2 && d.toDelete.count() === 0)
-  }
-
   test("changelog: every non-unchanged key with its op, equal to diff's two sets") {
     val prev = batchOf("a" -> "t1", "b" -> "t1", "c" -> "t1")
     val state = stateOf(prev)

@@ -1,56 +1,55 @@
 #!/usr/bin/env python3
 """Regenerate QUERIES.md — the browsable index of SparkEntry.queries
-(name, first comment sentence, check type). Dev tool; run after adding
+(name, first comment sentence, check type), read from the `Query(...)`
+declarations in src/main/scala/graft/queries/. Dev tool; run after adding
 queries."""
+import glob
 import re
-src = open('src/main/scala/graft/SparkEntry.scala').read()
-lines = src.split('\n')
+
+
 def summarize(block):
     txt = ' '.join(c.strip().lstrip('/').strip() for c in block
                    if c.strip().startswith('//'))
     txt = re.sub(r'\s+', ' ', txt).strip()
     return txt.split(' — ')[0].split('. ')[0][:110] if txt else ''
 
-entries, comment, in_queries = [], [], False
-inner, inner_done, cur = [], False, None  # 1st block inside cur's lambda
-for ln in lines:
-    if 'def queries: Map[' in ln: in_queries = True; continue
-    if 'def oracleSql' in ln: in_queries = False
-    if not in_queries: continue
-    m = re.match(r'    "([a-z0-9_]+)" -> ', ln)
-    if m:
-        # A top-level comment block IMMEDIATELY above the query-name
-        # literal describes that query; a comment inside the previous
-        # query's lambda body must not leak into the next row. When no
-        # block sits above, fall back to the first comment block inside
-        # the query's own lambda.
+
+CHECK = {'Oracle': 'oracle', 'NoOracle': 'rows-only (reasoned)'}
+rows = []
+for path in sorted(glob.glob('src/main/scala/graft/queries/*Queries.scala')):
+    # cur = [name, description from the comment above, check kind]
+    comment, cur, inner, inner_done = [], None, [], False
+
+    def close():
         if cur is not None:
-            entries.append((cur[0], cur[1] or summarize(inner)))
-        cur = (m.group(1), summarize(comment))
-        inner, inner_done, comment = [], False, []
-    elif re.match(r'    //', ln):
-        comment.append(ln)
-    else:
-        if (ln.strip().startswith('//') and cur is not None
-                and not inner_done):
+            rows.append((cur[0], cur[1] or summarize(inner), CHECK[cur[2]]))
+
+    for ln in open(path).read().split('\n'):
+        m = re.match(r'    Query\("([a-z0-9_]+)", ', ln)
+        if m:
+            # A top-level comment block IMMEDIATELY above the declaration
+            # describes that query; a comment inside the previous query
+            # must not leak into the next row. When no block sits above,
+            # fall back to the first comment block inside the query's own
+            # plan (the check's comments never count).
+            close()
+            cur = [m.group(1), summarize(comment), None]
+            inner, inner_done, comment = [], False, []
+            continue
+        if re.match(r'    //', ln):
+            comment.append(ln)
+            continue
+        comment = []
+        if cur is None or cur[2] is not None:
+            continue
+        check = re.match(r'      (Oracle|NoOracle)\b', ln)
+        if check:
+            cur[2] = check.group(1)
+        elif ln.strip().startswith('//') and not inner_done:
             inner.append(ln)
         elif inner and ln.strip():
             inner_done = True    # block ended; keep only the first
-        comment = []
-if cur is not None:
-    entries.append((cur[0], cur[1] or summarize(inner)))
-omap = set(re.findall(r'^    "([a-z0-9_]+)" ->',
-                      src.split('def oracleSql')[1], re.M))
-noor = set(re.findall(r'^    "([a-z0-9_]+)" ->',
-                      src.split('def noOracleReason')[1], re.M))
-seen, rows = set(), []
-for name, desc in entries:
-    if name in seen: continue
-    seen.add(name)
-    check = ('oracle' if name in omap else
-             'rows-only (reasoned)' if name in noor else 'MISSING')
-    rows.append((name, desc, check))
-assert not [r for r in rows if r[2] == 'MISSING'], 'uncovered query!'
+    close()
 out = ['# QUERIES — generated index of the driver-contract battery', '',
        f'{len(rows)} queries in `SparkEntry.queries`. "oracle" = DuckDB SQL twin,',
        'hash-compared by the driver; "rows-only" = documented in',
