@@ -170,9 +170,8 @@ object Dedup {
     * into the anti-join; this form shuffles ~(dup_rate + fpp) of them. The
     * filter build streams the state once with no shuffle at all (partial
     * sketches OR-merge). When the state outgrows one broadcastable filter
-    * (~billions of entries), the same shape runs per state bucket —
-    * ManifestedTable's hash-clustering contract gives each bucket its own
-    * bounded filter. */
+    * (~billions of entries), the same shape runs per hash partition of the
+    * state, each partition with its own bounded filter. */
   def bloomPrunedIncrementalSurvivors(batch: DataFrame, seenState: DataFrame,
       textCol: String, idCol: String, hashCol: String = "seen_hash",
       expectedItems: Long = 1L << 20): DataFrame = {

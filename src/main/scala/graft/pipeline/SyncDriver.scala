@@ -20,9 +20,14 @@ import graft.state.SnapshotStore
   *  - the delta is cached (MEMORY_AND_DISK) across LOAD / COMMIT / VERIFY so
   *    Spark's laziness cannot recompute the diff against already-advanced
   *    state — the explicit materialization boundary SURVEY §7.5 calls out.
+  *
+  * Node functions and `reconcile = true` relations run one and the same
+  * RECONCILE → LOAD → COMMIT → VERIFY sequence ([[reconcileApply]]), and
+  * VERIFY (the convergence check) cannot be switched off. Passthrough
+  * relations (`reconcile = false`, the reference's R4) only merge edges.
   */
 class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink,
-    verify: Boolean = true, nodeParallelism: Int = 1) {
+    nodeParallelism: Int = 1) {
 
   /** Serializes edge-table detach swaps: two node functions deleting the
     * two endpoint labels of the SAME edge table would otherwise race the
@@ -31,7 +36,9 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink,
 
   /** K6 — per-function sink/commit wall time from the last run, the
     * engine's `WriteRequest.Duration` analog (reference `model.go:13`,
-    * `neo4j.go:111-114`): populated for functions whose delta was applied. */
+    * `neo4j.go:111-114`): populated for every reconciled function (node
+    * functions and `reconcile = true` relations); near 0 when a function's
+    * delta was empty. */
   private val lastDurations =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
   def lastRunMetrics: Map[String, Double] = {
@@ -94,47 +101,25 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink,
     val batch = fn.transform(doc)
     fn.kind match {
       case CreateNode(label) =>
-        val state = store.read(spec.key, fn.name)
-        val delta = Reconcile.diff(batch, state)
-        // Materialization boundary: pin the delta before the sink mutates
-        // tables and the store advances state (two-phase contract).
-        delta.toCreate.persist(StorageLevel.MEMORY_AND_DISK)
-        delta.toDelete.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (nc, nd) = (delta.toCreate.count(), delta.toDelete.count())
-          val writeT0 = System.nanoTime()
-          if (nc > 0 || nd > 0) {
-            sink.applyNodeDelta(label, delta.toCreate, delta.toDelete)
-            if (nd > 0) {
-              // DETACH DELETE semantics (reference neo4j.go:117): edges
-              // touching a deleted node go with it.
-              spec.functions.foreach { other =>
-                other.kind match {
-                  case CreateRelation(rt, la, lb, _) if la == label || lb == label =>
-                    detachLock.synchronized {
-                      sink.detachEdges(edgeTable(rt, la, lb),
-                        if (la == label) delta.toDelete else emptyKeys(),
-                        if (lb == label) delta.toDelete else emptyKeys())
-                    }
-                  case _ =>
-                }
+        reconcileApply(spec, fn, batch, "keys") { (delta, deleted) =>
+          sink.applyNodeDelta(label, delta.toCreate, delta.toDelete)
+          if (deleted > 0) {
+            // DETACH DELETE semantics (reference neo4j.go:117): edges
+            // touching a deleted node go with it.
+            spec.functions.foreach { other =>
+              other.kind match {
+                case CreateRelation(rt, la, lb, _) if la == label || lb == label =>
+                  detachLock.synchronized {
+                    sink.detachEdges(edgeTable(rt, la, lb),
+                      if (la == label) delta.toDelete else emptyKeys(),
+                      if (lb == label) delta.toDelete else emptyKeys())
+                  }
+                case _ =>
               }
             }
-            store.commit(spec.key, fn.name, Reconcile.postState(batch))
           }
-          lastDurations.put(fn.name, (System.nanoTime() - writeT0) / 1e9)
-          if (verify) {
-            // R5 convergence check (reference main.go:224-237): a second
-            // diff against committed state must be empty for nodes.
-            val violations = Reconcile.convergenceViolations(
-              batch, store.read(spec.key, fn.name))
-            require(violations == 0, s"commit failed for ${fn.name}: " +
-              s"$violations unconverged keys")
-          }
-          (nc, nd)
-        } finally {
-          delta.toCreate.unpersist(); delta.toDelete.unpersist()
         }
+
       case CreateRelation(relType, labelA, labelB, false) =>
         // R4: relations skip reconciliation — everything is toCreate,
         // nothing deleted (reference recon.go:42-44, neo4j.go:119-120).
@@ -161,35 +146,53 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink,
           .withColumn("external_id",
             concat_ws(sep, col("a_id"), col("b_id")))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val state = store.read(spec.key, fn.name)
-        val delta = Reconcile.diff(keyed, state)
-        delta.toCreate.persist(StorageLevel.MEMORY_AND_DISK)
-        delta.toDelete.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (nc, nd) = (delta.toCreate.count(), delta.toDelete.count())
-          if (nc > 0 || nd > 0) {
-            val deletePairs = delta.toDelete.select(
-              element_at(split(col("external_id"), sep), 1).as("a_id"),
-              element_at(split(col("external_id"), sep), 2).as("b_id"))
-            sink.applyEdgeDelta(edgeTable(relType, labelA, labelB),
-              delta.toCreate.select("a_id", "b_id"), deletePairs,
-              labelA, labelB, alreadyResolved = true)
-            store.commit(spec.key, fn.name, Reconcile.postState(keyed))
-          }
-          if (verify) {
-            // symmetric convergence check — the reference skips this for
-            // relations (main.go:235 guards CREATE_NODE only); reconciled
-            // edges get the same guarantee as nodes.
-            val violations = Reconcile.convergenceViolations(
-              keyed, store.read(spec.key, fn.name))
-            require(violations == 0, s"commit failed for ${fn.name}: " +
-              s"$violations unconverged edge pairs")
-          }
-          (nc, nd)
-        } finally {
-          delta.toCreate.unpersist(); delta.toDelete.unpersist()
-          keyed.unpersist()
-        }
+        try reconcileApply(spec, fn, keyed, "edge pairs") { (delta, _) =>
+          val deletePairs = delta.toDelete.select(
+            element_at(split(col("external_id"), sep), 1).as("a_id"),
+            element_at(split(col("external_id"), sep), 2).as("b_id"))
+          sink.applyEdgeDelta(edgeTable(relType, labelA, labelB),
+            delta.toCreate.select("a_id", "b_id"), deletePairs,
+            labelA, labelB, alreadyResolved = true)
+        } finally keyed.unpersist()
+    }
+  }
+
+  /** RECONCILE → LOAD → COMMIT STATE → VERIFY for one reconciled function
+    * (a node function, or a relation with `reconcile = true`): diff
+    * `keyed` against the committed state; when the delta is non-empty,
+    * hand it and its delete count to `apply` (the sink write), then commit
+    * the post-image. Returns (created, deleted).
+    *
+    * The R5 convergence check always runs (reference main.go:224-237): a
+    * second diff of `keyed` against the state just committed must be
+    * empty, else the pass fails with `commit failed for <fn>` and counts
+    * the unconverged `noun`. The reference checks nodes only
+    * (main.go:235 guards CREATE_NODE); reconciled edges get the same
+    * guarantee. */
+  private def reconcileApply(spec: IntegrationSpec, fn: FunctionSpec,
+      keyed: DataFrame, noun: String)(
+      apply: (Reconcile.Delta, Long) => Unit): (Long, Long) = {
+    val state = store.read(spec.key, fn.name)
+    val delta = Reconcile.diff(keyed, state)
+    // Materialization boundary: pin the delta before the sink mutates
+    // tables and the store advances state (two-phase contract).
+    delta.toCreate.persist(StorageLevel.MEMORY_AND_DISK)
+    delta.toDelete.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (nc, nd) = (delta.toCreate.count(), delta.toDelete.count())
+      val writeT0 = System.nanoTime()
+      if (nc > 0 || nd > 0) {
+        apply(delta, nd)
+        store.commit(spec.key, fn.name, Reconcile.postState(keyed))
+      }
+      lastDurations.put(fn.name, (System.nanoTime() - writeT0) / 1e9)
+      val violations = Reconcile.convergenceViolations(
+        keyed, store.read(spec.key, fn.name))
+      require(violations == 0, s"commit failed for ${fn.name}: " +
+        s"$violations unconverged $noun")
+      (nc, nd)
+    } finally {
+      delta.toCreate.unpersist(); delta.toDelete.unpersist()
     }
   }
 }

@@ -127,11 +127,6 @@ private[graft] object MultimodalQueries {
         |   ELSE 1 END AS n_frames
         |FROM documents""".stripMargin)),
 
-    // perceptual image fingerprint over BMPs synthesized WITH real pixel
-    // arrays (bottom-up rows, 4-byte padding): dims decoded from header
-    // bytes, 64 cell-center pixels sampled, integer luma + mean-threshold
-    // bits ([[Multimodal.imageAHash]]); the oracle regenerates everything
-    // from the pixel generator's closed form.
     // content-defined chunking over synthesized binary payloads
     // (Muthitacharoen et al. 2001 / FastCDC gear window): payloads
     // alternate 512-byte SHARED and asset-specific segments, so chunk
@@ -170,6 +165,11 @@ private[graft] object MultimodalQueries {
         |FROM (SELECT chunk_sig, len, COUNT(*) AS cnt
         |  FROM chunks GROUP BY 1, 2) u""".stripMargin)),
 
+    // perceptual image fingerprint over BMPs synthesized WITH real pixel
+    // arrays (bottom-up rows, 4-byte padding): dims decoded from header
+    // bytes, 64 cell-center pixels sampled, integer luma + mean-threshold
+    // bits ([[Multimodal.imageAHash]]); the oracle regenerates everything
+    // from the pixel generator's closed form.
     Query("mm_ahash", (s, dir) => {
       val len = length(encode(col("text"), "UTF-8"))
       // pixel synthesis is the expensive per-row stage: rebalance the

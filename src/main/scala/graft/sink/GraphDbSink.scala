@@ -108,8 +108,8 @@ class GraphDbWriter(txFactory: GraphTxFactory, batchSize: Int = 1000)
   *    re-drops anything dangling (there should be none — same input).
   */
 class MirroredGraphSink(spark: SparkSession, root: String,
-    writer: GraphDbWriter, nodeBuckets: Int = 0, edgeBuckets: Int = 0)
-  extends GraphSink(spark, root, nodeBuckets, edgeBuckets) {
+    writer: GraphDbWriter)
+  extends GraphSink(spark, root) {
 
   import org.apache.spark.sql.functions.col
 

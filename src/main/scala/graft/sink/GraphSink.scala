@@ -6,75 +6,39 @@ import org.apache.spark.sql.functions._
 import graft.model.Schemas
 
 /** Property-graph sink with the reference's Cypher semantics (reference
-  * `internal/store/neo4j.go`), materialized as parquet node/edge tables.
+  * `internal/store/neo4j.go`), materialized as one parquet [[graft.state
+  * .AtomicTable]] per node label and per edge table.
   *
-  * - [[upsertNodes]] = `UNWIND $list AS item MERGE (x:Label {external_id})
-  *   SET x = item` (`neo4j.go:86-88`): keyed last-wins upsert that replaces
-  *   ALL properties of a matched node (no partial update).
-  * - [[deleteNodes]] = `MATCH … DETACH DELETE x` (`neo4j.go:116-118`):
-  *   delete by key list.
+  * - [[applyNodeDelta]] = `UNWIND $list AS item MERGE (x:Label
+  *   {external_id}) SET x = item` plus the node half of `MATCH … DETACH
+  *   DELETE x` (`neo4j.go:86-88`, `:116-118`): keyed upsert that replaces
+  *   ALL properties of a matched node (no partial update), and delete by
+  *   key. [[detachEdges]] is the DETACH half.
   * - [[mergeEdges]] = edge `MERGE` after endpoint `MATCH` (`neo4j.go:89-91`):
-  *   inner-join resolution against both endpoint node tables (dropping
+  *   semi-join resolution against both endpoint node tables (dropping
   *   dangling edges exactly as MATCH does), then idempotent dedup-append.
-  * - create+delete for one function are applied as one atomic table swap —
-  *   the analog of the reference's single bolt transaction (`neo4j.go:77-81`).
+  * - [[applyEdgeDelta]] applies a reconciled relation's pair creates and
+  *   deletes.
+  * - every write reads the whole table, applies the delta and publishes
+  *   the new image as one atomic version swap — the analog of the
+  *   reference's single bolt transaction (`neo4j.go:77-81`).
   *
-  * Scale notes: the upsert is a full-outer merge on the key — one hash join,
-  * batch side usually broadcast by AQE since deltas are small relative to
-  * the table. Edge resolution broadcasts the node-key dimensions when they
-  * fit (`broadcast()` hint left to AQE: dimension sizes vary). Node tables
-  * are written hash-clustered by key so the next merge co-partitions — the
-  * moral equivalent of the reference's `CREATE INDEX … ON external_id`
-  * (`neo4j.go:54-71`).
-  *
-  * `nodeBuckets > 0` switches node tables to hash-bucketed
-  * [[graft.state.ManifestedTable]] storage: a delta then reads and
-  * rewrites ONLY the buckets its keys route to — the property that makes a
-  * 1% delta against a 100 TB node table affordable. Per-commit atomicity
-  * is a single manifest swap either way; cross-function replay safety is
-  * unchanged (at-least-once + idempotent MERGE).
-  *
-  * `edgeBuckets > 0` does the same for edge tables, routed on the
-  * composite `(a_id, b_id)` key. This matters MORE than node bucketing at
-  * scale: 4 of the reference's 9 functions are relations
-  * (`main.go:45-79`) and the edge table is the fan-out one. Pair-keyed
-  * deltas ([[mergeEdges]], [[applyEdgeDelta]]) prune exactly — only
-  * buckets the delta's pairs route to are read and rewritten. The one
-  * asymmetry is [[detachEdges]]: a node-key delete doesn't determine the
-  * pair buckets, so the touched set comes from a column-pruned scan of the
-  * (a_id, b_id) pair columns — a cheap read-side pass at 100 TB (two
-  * string columns, predicate-semi-joined against a small delete set), vs
-  * the full-table REWRITE the unbucketed path pays.
+  * The whole-table rewrite is deliberate: on the `sync_steady` benchmark a
+  * hash-bucketed partial-rewrite layout spent more on the jobs that find
+  * the touched buckets than the rewrite it saved (ROADMAP direction 2).
   */
-class GraphSink(spark: SparkSession, root: String, nodeBuckets: Int = 0,
-    edgeBuckets: Int = 0) {
+class GraphSink(spark: SparkSession, root: String) {
 
   private val key = Schemas.externalId
 
   private def table(kind: String, name: String) =
     new graft.state.AtomicTable(spark, s"$root/$kind/$name")
 
-  private def bucketed(label: String) =
-    new graft.state.ManifestedTable(spark, s"$root/nodes/$label", nodeBuckets)
-
-  private def bucketedEdges(relType: String) =
-    new graft.state.ManifestedTable(spark, s"$root/edges/$relType", edgeBuckets)
-
   def readNodes(label: String, schema: org.apache.spark.sql.types.StructType = null): DataFrame =
-    if (nodeBuckets > 0) bucketed(label).read(schema)
-    else table("nodes", label).read(schema)
+    table("nodes", label).read(schema)
 
   def readEdges(relType: String): DataFrame =
-    if (edgeBuckets > 0) bucketedEdges(relType).read(Schemas.edge)
-    else table("edges", relType).read(Schemas.edge)
-
-  /** Distinct bucket ids a pair set routes to — a collect of ints bounded
-    * by `edgeBuckets`, never row data. */
-  private def pairBuckets(t: graft.state.ManifestedTable,
-      pairs: DataFrame*): Set[Int] =
-    pairs.map(_.select(t.bucketOf(col("a_id"), col("b_id")).as("b")))
-      .reduce(_ union _)
-      .distinct().collect().map(_.getLong(0).toInt).toSet
+    table("edges", relType).read(Schemas.edge)
 
   /** K1 + K2 in one transaction: apply creates (replacing whole rows on
     * key match — `SET x = item`) and deletes (by key) to the node table as
@@ -87,32 +51,12 @@ class GraphSink(spark: SparkSession, root: String, nodeBuckets: Int = 0,
     * explicit order (reference batch order, `neo4j.go:87-88`). */
   def applyNodeDelta(label: String, toCreate: DataFrame,
       toDelete: DataFrame): Unit = {
-    if (nodeBuckets > 0) { applyNodeDeltaBucketed(label, toCreate, toDelete); return }
     val existing = readNodes(label, toCreate.schema)
     val survivors = existing
       .join(toDelete.select(col(key)), Seq(key), "left_anti")
       .join(toCreate.select(col(key)), Seq(key), "left_anti")
     table("nodes", label)
       .commit(survivors.unionByName(toCreate.dropDuplicates(key)))
-  }
-
-  /** Bucket-pruned merge: only the buckets the delta's keys route to are
-    * read, merged, and rewritten; every other bucket is carried forward by
-    * manifest reference. The touched-bucket set is a collect of distinct
-    * bucket IDS (ints bounded by nodeBuckets — never row data). */
-  private def applyNodeDeltaBucketed(label: String, toCreate: DataFrame,
-      toDelete: DataFrame): Unit = {
-    val t = bucketed(label)
-    val touched = toCreate.select(t.bucketOf(col(key)).as("b"))
-      .union(toDelete.select(t.bucketOf(col(key)).as("b")))
-      .distinct().collect().map(_.getLong(0).toInt).toSet
-    if (touched.isEmpty) return
-    val existing = t.readBucketSubset(touched, toCreate.schema)
-    val survivors = existing
-      .join(toDelete.select(col(key)), Seq(key), "left_anti")
-      .join(toCreate.select(col(key)), Seq(key), "left_anti")
-    t.commitBuckets(survivors.unionByName(toCreate.dropDuplicates(key)),
-      key, touched)
   }
 
   /** Endpoint resolution == Cypher `MATCH (a),(b)` before the edge MERGE
@@ -137,19 +81,9 @@ class GraphSink(spark: SparkSession, root: String, nodeBuckets: Int = 0,
       labelB: String): Unit = {
     val resolved = resolveEndpoints(edges, labelA, labelB)
       .dropDuplicates("a_id", "b_id")
-    if (edgeBuckets > 0) {
-      val t = bucketedEdges(relType)
-      val touched = pairBuckets(t, resolved)
-      if (touched.isEmpty) return
-      val existing = t.readBucketSubset(touched, Schemas.edge)
-      t.commitBuckets(
-        existing.unionByName(resolved).dropDuplicates("a_id", "b_id"),
-        Seq("a_id", "b_id"), touched)
-    } else {
-      val existing = readEdges(relType)
-      table("edges", relType)
-        .commit(existing.unionByName(resolved).dropDuplicates("a_id", "b_id"))
-    }
+    val existing = readEdges(relType)
+    table("edges", relType)
+      .commit(existing.unionByName(resolved).dropDuplicates("a_id", "b_id"))
   }
 
   /** Reconciled-edge mode: one transaction applying resolved creates and
@@ -166,55 +100,20 @@ class GraphSink(spark: SparkSession, root: String, nodeBuckets: Int = 0,
     val resolved = (if (alreadyResolved) toCreate
       else resolveEndpoints(toCreate, labelA, labelB))
       .dropDuplicates("a_id", "b_id")
-    if (edgeBuckets > 0) {
-      // both creates and deletes carry full pairs → the touched set prunes
-      // exactly; every untouched bucket is carried by manifest reference
-      val t = bucketedEdges(relType)
-      val touched = pairBuckets(t, resolved,
-        deletePairs.select(col("a_id"), col("b_id")))
-      if (touched.isEmpty) return
-      val kept = t.readBucketSubset(touched, Schemas.edge)
-        .join(deletePairs.select("a_id", "b_id"), Seq("a_id", "b_id"),
-          "left_anti")
-      t.commitBuckets(
-        kept.unionByName(resolved).dropDuplicates("a_id", "b_id"),
-        Seq("a_id", "b_id"), touched)
-    } else {
-      val kept = readEdges(relType)
-        .join(deletePairs.select("a_id", "b_id"), Seq("a_id", "b_id"),
-          "left_anti")
-      table("edges", relType)
-        .commit(kept.unionByName(resolved).dropDuplicates("a_id", "b_id"))
-    }
+    val kept = readEdges(relType)
+      .join(deletePairs.select("a_id", "b_id"), Seq("a_id", "b_id"),
+        "left_anti")
+    table("edges", relType)
+      .commit(kept.unionByName(resolved).dropDuplicates("a_id", "b_id"))
   }
 
   /** K2 DETACH semantics for edges: when nodes are deleted, drop edges
     * touching them (the reference gets this from `DETACH DELETE`). */
   def detachEdges(relType: String, deletedA: DataFrame,
       deletedB: DataFrame): Unit = {
-    if (edgeBuckets > 0) {
-      // A node-key delete doesn't determine pair buckets, so find them by
-      // scanning the pair columns (column-pruned; the delete sets are
-      // deltas and broadcast) — then rewrite ONLY buckets that actually
-      // hold a doomed edge. Read-side pass instead of full-table rewrite.
-      val t = bucketedEdges(relType)
-      val all = t.read(Schemas.edge)
-      val doomed = all
-        .join(deletedA.select(col(key).as("a_id")), Seq("a_id"), "left_semi")
-        .unionByName(all
-          .join(deletedB.select(col(key).as("b_id")), Seq("b_id"), "left_semi"))
-      val touched = pairBuckets(t, doomed)
-      if (touched.isEmpty) return
-      val kept = t.readBucketSubset(touched, Schemas.edge)
-        .join(deletedA.select(col(key).as("a_id")), Seq("a_id"), "left_anti")
-        .join(deletedB.select(col(key).as("b_id")), Seq("b_id"), "left_anti")
-      t.commitBuckets(kept, Seq("a_id", "b_id"), touched)
-    } else {
-      val existing = readEdges(relType)
-      val kept = existing
-        .join(deletedA.select(col(key).as("a_id")), Seq("a_id"), "left_anti")
-        .join(deletedB.select(col(key).as("b_id")), Seq("b_id"), "left_anti")
-      table("edges", relType).commit(kept)
-    }
+    val kept = readEdges(relType)
+      .join(deletedA.select(col(key).as("a_id")), Seq("a_id"), "left_anti")
+      .join(deletedB.select(col(key).as("b_id")), Seq("b_id"), "left_anti")
+    table("edges", relType).commit(kept)
   }
 }

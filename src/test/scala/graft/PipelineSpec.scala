@@ -83,39 +83,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(sink.readEdges("has__project__bucket").count() === 0)
   }
 
-  test("bucketed node sink: full golden flow equals plain sink") {
-    val root = Files.createTempDirectory("graft-bkt").toString
+  test("reconciled edges: pair delete, detach on partial node delete, full delete") {
+    val root = Files.createTempDirectory("graft-recon-edge").toString
     val store = new SnapshotStore(spark, s"$root/state")
-    val sink = new GraphSink(spark, s"$root/graph", nodeBuckets = 4)
+    val sink = new GraphSink(spark, s"$root/graph")
     val driver = new SyncDriver(spark, store, sink)
-    val spec = HcpIntegration.spec("hcp-bkt", s => HcpFixture.doc(s))
-    val r1 = driver.run(spec)
-    assert(r1("buckets") === ((2L, 0L)) && r1("packer_build") === ((3L, 0L)))
-    assert(sink.readNodes("bucket").count() === 2)
-    assert(sink.readEdges("creates__version__packer_build").count() === 3)
-    // idempotent re-run then full delete, through the bucketed path
-    val r2 = driver.run(spec)
-    assert(r2("buckets") === ((0L, 0L)))
-    val specEmpty = HcpIntegration.spec("hcp-bkt",
-      s => HcpFixture.doc(s, HcpFixture.emptyJson))
-    val r3 = driver.run(specEmpty)
-    assert(r3("buckets") === ((0L, 2L)))
-    assert(sink.readNodes("bucket").count() === 0)
-    assert(sink.readEdges("has__project__bucket").count() === 0)
-  }
-
-  test("fully bucketed sink (nodes + edges): full golden flow incl. reconciled edges") {
-    val root = Files.createTempDirectory("graft-bkt2").toString
-    val store = new SnapshotStore(spark, s"$root/state")
-    val sink = new GraphSink(spark, s"$root/graph", nodeBuckets = 4,
-      edgeBuckets = 4)
-    val driver = new SyncDriver(spark, store, sink)
-    // reconcile = true on one relation exercises applyEdgeDelta's bucketed
-    // pair-pruned path; the others go through bucketed mergeEdges; node
-    // deletes exercise the bucketed detach (touched-set via pair scan)
+    // reconcile = true on the one relation runs applyEdgeDelta; node
+    // deletes run detachEdges on the same edge table
     import graft.pipeline.{CreateNode, CreateRelation, FunctionSpec, IntegrationSpec}
     import graft.operators.HcpTransforms
-    def spec(body: String) = IntegrationSpec("hcp-bkt2",
+    def spec(body: String) = IntegrationSpec("hcp-recon-edge",
       s => HcpFixture.doc(s, body), Seq(
         FunctionSpec("buckets", CreateNode("bucket"), HcpTransforms.bucketNodes),
         FunctionSpec("version", CreateNode("version"), HcpTransforms.versionNodes),
@@ -131,8 +108,8 @@ class PipelineSpec extends AnyFunSuite {
     val r2 = driver.run(spec(HcpFixture.json))
     assert(r2.values.forall(_ == ((0L, 0L))))
 
-    // b2 vanishes upstream: bucketed node delete + bucketed detach + the
-    // reconciled edge diff's pair delete all land; (b1, v1) survives
+    // b2 vanishes upstream: node delete + detach + the reconciled edge
+    // diff's pair delete all land; (b1, v1) survives
     val onlyB1 = HcpFixture.json.replaceAll(
       """\{"id": "b2".*\]\}\}\s*""", "").replaceAll(",\\s*]", "]")
     val r3 = driver.run(spec(onlyB1))
@@ -141,7 +118,7 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet ===
       Set(("b1", "v1")))
 
-    // full delete through every bucketed path
+    // full delete: every node and edge goes
     driver.run(spec(HcpFixture.emptyJson))
     assert(sink.readNodes("bucket").count() === 0)
     assert(sink.readEdges("has__bucket__version").count() === 0)

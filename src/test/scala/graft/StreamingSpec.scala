@@ -86,7 +86,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = sync.start(spec, stream, s"$root/ckpt")
     try {
       // pass 1: create — full extract → reconcile → sink → commit →
-      // convergence (SyncDriver verify=true raises on any unconverged key)
+      // convergence (SyncDriver's VERIFY raises on any unconverged key)
       fetchSnapshot()
       q.processAllAvailable()
       assert(sink.readNodes("bucket").count() === 2)

@@ -36,6 +36,8 @@ for path in sorted(glob.glob('src/main/scala/graft/queries/*Queries.scala')):
             cur = [m.group(1), summarize(comment), None]
             inner, inner_done, comment = [], False, []
             continue
+        if re.match(r'    // =====.*=====\s*$', ln):
+            continue    # a section marker titles the family, not a query
         if re.match(r'    //', ln):
             comment.append(ln)
             continue
