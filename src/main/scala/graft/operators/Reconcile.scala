@@ -12,8 +12,8 @@ import graft.model.Schemas
   *
   * The reference diffs an incoming batch against an in-memory
   * `external_id → crc32` map, single-threaded. Here the diff is ONE
-  * full-outer hash join on the key — distributed, AQE-planned, and at 100 TB
-  * the state table is partitioned by key so the join co-partitions with it.
+  * full-outer join on the key — distributed and AQE-planned; state is not
+  * stored clustered, so at scale both sides shuffle on the key.
   * When a batch is small relative to state (the common incremental case) AQE
   * broadcasts the batch side and the diff costs a single pass over state
   * with no shuffle of the big side.
@@ -70,13 +70,31 @@ object Reconcile {
   /** R1 — snapshot diff. (The reference's relation mode, `recon.go:42-44`,
     * needs no diff: every edge is created and nothing is deleted, so a
     * caller passes the batch straight to the merge-only sink.) */
-  def diff(batch: DataFrame, state: DataFrame): Delta = {
-    val cls = classified(batch, state)
-    val toCreate = cls.filter(col("op") === OpCreate)
-      .select(batch.columns.map(c => col(s"b.`$c`")): _*)
-    val toDelete = cls.filter(col("op") === OpDelete)
-      .select(col(s"s.$key").as(key))
-    Delta(toCreate, toDelete)
+  def diff(batch: DataFrame, state: DataFrame): Delta =
+    delta(changes(batch, state), batch.columns.toSeq)
+
+  /** The [[classified]] rows that are not unchanged: the whole delta of
+    * one join, sized by the delta rather than by state, which is what a
+    * sync pins between diff and write. */
+  def changes(batch: DataFrame, state: DataFrame): DataFrame =
+    classified(batch, state).filter(col("op") =!= OpUnchanged)
+
+  /** The delta of a [[changes]] image whose batch had `batchColumns`: two
+    * filters of `changes`, so when it is pinned neither side re-runs the
+    * join. */
+  def delta(changes: DataFrame, batchColumns: Seq[String]): Delta =
+    Delta(
+      changes.filter(col("op") === OpCreate)
+        .select(batchColumns.map(c => col(s"b.`$c`")): _*),
+      changes.filter(col("op") === OpDelete).select(col(s"s.$key").as(key)))
+
+  /** (created, deleted) row counts of a [[changes]] image from ONE
+    * aggregate — one job over a pinned image, where a `count()` on each
+    * side of its [[delta]] would be two. */
+  def deltaCounts(changes: DataFrame): (Long, Long) = {
+    val r = changes.agg(count_if(col("op") === OpCreate),
+      count_if(col("op") === OpDelete)).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Changelog relation: every non-unchanged key with its op, from ONE
@@ -88,9 +106,7 @@ object Reconcile {
     * two sides genuinely flow to different sinks in different shapes
     * (creates carry batch columns, deletes only the key). */
   def changelog(batch: DataFrame, state: DataFrame): DataFrame =
-    classified(batch, state)
-      .filter(col("op") =!= OpUnchanged)
-      .select(col("__key").as(key), col("op"))
+    changes(batch, state).select(col("__key").as(key), col("op"))
 
   /** R2 — post-commit state image. For full (node) mode the post-image is
     * simply the batch's key→hash projection: commit upserts every created
@@ -176,10 +192,8 @@ object Reconcile {
   /** R5 — convergence check: a second diff immediately after commit must be
     * empty for node functions (reference `main.go:224-237`, `"commit
     * failed"`). Returns the non-empty-delta count (0 = converged). */
-  def convergenceViolations(batch: DataFrame, committedState: DataFrame): Long = {
-    val cls = classified(batch, committedState)
-    cls.filter(col("op") =!= OpUnchanged).count()
-  }
+  def convergenceViolations(batch: DataFrame, committedState: DataFrame): Long =
+    changes(batch, committedState).count()
 
   /** Incremental JOIN view maintenance (the join sibling of
     * [[maintainAggState]]): given the stored sides (aOld, bOld) and

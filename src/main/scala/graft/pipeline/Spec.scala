@@ -40,6 +40,16 @@ case class IntegrationSpec(
     name: String,
     load: SparkSession => DataFrame,
     functions: Seq[FunctionSpec]) {
+  // A function's name keys its state table and its result, so two
+  // functions of one name would share state and one result would be lost;
+  // rejected here, before any read or write.
+  locally {
+    val names = functions.map(_.name)
+    val repeated = names.diff(names.distinct).distinct
+    require(repeated.isEmpty, s"integration $name declares function " +
+      s"name(s) ${repeated.mkString(", ")} more than once")
+  }
+
   /** Key analog of `type:url` (`model.go:37-44`). */
   def key: String = name
 }

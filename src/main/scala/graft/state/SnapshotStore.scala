@@ -22,10 +22,10 @@ import graft.model.Schemas
   * idempotent (MERGE semantics), which is the reference's own
   * at-least-once story.
   *
-  * Scale: the post-image can be written `repartition(key)` so state
-  * parquet is hash-clustered by key; at 1000-executor scale the reconcile
-  * join reads state co-partitioned with the batch's own hash partitioning,
-  * and AQE broadcasts whichever side turns out small.
+  * Scale: the state image is written with whatever partitioning its
+  * post-image plan has (no caller passes [[commit]]'s `partitions`); the
+  * reconcile join shuffles both sides on the key, or AQE broadcasts
+  * whichever side turns out small.
   */
 class SnapshotStore(spark: SparkSession, root: String) {
 

@@ -65,11 +65,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(sink.readEdges("creates__version__packer_build").count() === 0)
   }
 
-  test("parallel node execution: same results as sequential") {
+  test("pipelined node phase: create pass, then delete pass detaches edges") {
     val root = Files.createTempDirectory("graft-par").toString
     val store = new SnapshotStore(spark, s"$root/state")
     val sink = new GraphSink(spark, s"$root/graph")
-    val driver = new SyncDriver(spark, store, sink, nodeParallelism = 4)
+    val driver = new SyncDriver(spark, store, sink)
     val spec = HcpIntegration.spec("hcp-par", s => HcpFixture.doc(s))
     val r1 = driver.run(spec)
     assert(r1("buckets") === ((2L, 0L)) && r1("packer_build") === ((3L, 0L)))

@@ -11,7 +11,9 @@ def summarize(block):
     txt = ' '.join(c.strip().lstrip('/').strip() for c in block
                    if c.strip().startswith('//'))
     txt = re.sub(r'\s+', ' ', txt).strip()
-    return txt.split(' — ')[0].split('. ')[0][:110] if txt else ''
+    # the first sentence ends at '. ', but not at the one in "et al. "
+    first = re.split(r'(?<!\bet al)\. ', txt.split(' — ')[0])[0]
+    return first[:110] if txt else ''
 
 
 CHECK = {'Oracle': 'oracle', 'NoOracle': 'rows-only (reasoned)'}
