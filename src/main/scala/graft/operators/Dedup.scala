@@ -797,10 +797,9 @@ object Dedup {
     * pass `round(1000·J) ≥ thr` — i.e.
     * ceil((2thr−1)(na+nb)/(1999+2thr)) − 1. The −1 keeps the pruning
     * strictly lossless against the double-rounded jacc filter, which
-    * stays the sole arbiter of boundary pairs. Shared with PpLab so the
-    * lab always measures the predicate production ships (an off-by-one
-    * here silently drops true near-dup pairs). */
-  private[graft] def minOverlapMinus1Sql(thr: Long): String =
+    * stays the sole arbiter of boundary pairs (an off-by-one here
+    * silently drops true near-dup pairs). */
+  private def minOverlapMinus1Sql(thr: Long): String =
     s"((2 * $thr - 1) * (na + nb) + 1998 + 2 * $thr) " +
       s"DIV (1999 + 2 * $thr) - 1"
 

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * `main.go:158-171`'s per-function routing). Unlike the engine's heuristic tiers
   * (`chargram_langid`'s top-k profile overlap, `langId`'s stopword
   * scan), this is a TRAINED posterior model with the production
-  * train/apply split: fit on labeled history, persist through the
-  * crash-safe snapshot store, score new batches against the reloaded
+  * train/apply split: fit on labeled history, publish a version through
+  * [[graft.state.ModelRegistry]], score new batches against the pinned
   * artifact.
   *
   * Math (add-1 / Laplace smoothing, all exact integer rationals until
@@ -465,27 +465,6 @@ object NaiveBayes {
   }
 
   private val NbcTableNames = Seq("grams", "classes", "corpus")
-
-  /** Persist a trained model through the crash-safe snapshot store —
-    * three atomic table commits under
-    * `(integration = prefix, function = nbc_<table>)`; a scoring job
-    * reading mid-commit sees the old model, never a torn one (the
-    * kn3StoreModel publish contract). */
-  def nbcStoreModel(train: DataFrame, textCol: String, labelCol: String,
-      store: graft.state.SnapshotStore, prefix: String): Unit = {
-    val m = nbcTrain(train, textCol, labelCol)
-    NbcTableNames.zip(Seq(m.grams, m.classes, m.corpus))
-      .foreach { case (n, t) => store.commitTable(prefix, s"nbc_$n", t) }
-  }
-
-  /** Reload a stored model for scoring — the frozen-classifier read
-    * path. */
-  def nbcReadModel(store: graft.state.SnapshotStore,
-      prefix: String): NbcModel = {
-    val Seq(grams, classes, corpus) =
-      NbcTableNames.map(n => store.readTable(prefix, s"nbc_$n"))
-    NbcModel(grams, classes, corpus)
-  }
 
   /** Train and publish a model VERSION through the versioned registry —
     * the three tables land in one immutable version dir, promoted with a

@@ -642,7 +642,7 @@ object TextAnalysis {
     * Every table is an aggregate of the KEPT type set — the set the
     * count floor keeps near-constant under singleton-type growth — so
     * the frozen artifact is model-sized, not corpus-sized: exactly what
-    * makes persisting it ([[kn3StoreModel]]) and shipping it to a
+    * makes publishing it ([[kn3PublishModel]]) and shipping it to a
     * scoring job affordable at 100 TB of training text. */
   final case class Kn3Model(kept: DataFrame, ctx: DataFrame,
       cont: DataFrame, mid: DataFrame, uni: DataFrame, types: DataFrame)
@@ -751,33 +751,11 @@ object TextAnalysis {
   private val Kn3TableNames =
     Seq("kept", "ctx", "cont", "mid", "uni", "types")
 
-  /** Persist a trained [[Kn3Model]] through the engine's crash-safe
-    * snapshot store — six atomic table commits under
-    * `(integration = prefix, function = kn3_<table>)`. The store's
-    * pointer-swap commit gives the model artifact the same publish
-    * semantics as reconcile state: a scoring job never sees a
-    * half-written model. */
-  def kn3StoreModel(df: DataFrame, textCol: String, idCol: String,
-      store: graft.state.SnapshotStore, prefix: String): Unit = {
-    val m = kn3Model(df, textCol, idCol)
-    Kn3TableNames.zip(Seq(m.kept, m.ctx, m.cont, m.mid, m.uni, m.types))
-      .foreach { case (n, t) => store.commitTable(prefix, s"kn3_$n", t) }
-  }
-
-  /** Reload a stored model for scoring — the frozen-LM read path. */
-  def kn3ReadModel(store: graft.state.SnapshotStore,
-      prefix: String): Kn3Model = {
-    val Seq(kept, ctx, cont, mid, uni, types) =
-      Kn3TableNames.map(n => store.readTable(prefix, s"kn3_$n"))
-    Kn3Model(kept, ctx, cont, mid, uni, types)
-  }
-
   /** Train and publish a model VERSION through the versioned registry —
     * all six tables land in one immutable version dir and become visible
-    * with a single manifest swap ([[graft.state.ModelRegistry.publish]]);
-    * unlike the six independent [[kn3StoreModel]] commits, a concurrent
-    * scorer can never read a torn cross-table mix. Returns the promoted
-    * version. */
+    * with a single manifest swap ([[graft.state.ModelRegistry.publish]]),
+    * so a concurrent scorer can never read a torn cross-table mix.
+    * Returns the promoted version. */
   def kn3PublishModel(df: DataFrame, textCol: String, idCol: String,
       reg: graft.state.ModelRegistry, model: String): Long = {
     val m = kn3Model(df, textCol, idCol)
@@ -804,7 +782,7 @@ object TextAnalysis {
     * collect is MODEL-sized, never corpus-sized: every map aggregates
     * the KEPT (count ≥ 2) type set, the set the count floor holds
     * near-constant under crawl growth — the same boundedness argument
-    * that makes [[kn3StoreModel]]'s artifact persistable. */
+    * that makes [[kn3PublishModel]]'s artifact persistable. */
   final case class Kn3FrozenModel(kept: Map[String, Long],
       ctx: Map[String, (Long, Long, Long)],
       cont: Map[(String, String), Long],

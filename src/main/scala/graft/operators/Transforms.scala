@@ -17,13 +17,6 @@ object Transforms {
   def explodeArray(df: DataFrame, arrayCol: String, as: String): DataFrame =
     df.select(explode(col(arrayCol)).as(as))
 
-  /** T2 — two-level correlated flatten: parent stays in scope while its
-    * child array is exploded (reference `transform_build.json.tmpl:2-4`
-    * `range .buckets` × `range $bucket.latest_version.builds`). */
-  def explodeNested(df: DataFrame, arrayCol: String, as: String,
-      keep: Seq[Column]): DataFrame =
-    df.select(keep :+ explode(col(arrayCol)).as(as): _*)
-
   /** T3 — projection + rename (`id` → `external_id` etc.,
     * reference `transform_bucket.json.tmpl:5-10`). */
   def projectRename(df: DataFrame, mapping: (String, String)*): DataFrame =

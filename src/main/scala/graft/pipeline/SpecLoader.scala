@@ -113,10 +113,6 @@ object SpecLoader {
     items.map(s => ((s \ "op").extract[String], parseStep(name, s)))
   }
 
-  def transformFromJsonFile(path: String): DataFrame => DataFrame =
-    transformFromJson(new String(Files.readAllBytes(Paths.get(path)),
-      StandardCharsets.UTF_8))
-
   /** Run a declared curation chain and return BOTH the final frame and
     * the per-stage funnel — (stage, op, rows_in, rows_out) — the audit a
     * production curation job ships next to its output (which stage ate
@@ -176,29 +172,25 @@ object SpecLoader {
       case other => sys.error(s"$ctx: expected an object, got $other")
     }
 
-  /** Model-store kind of a declared gate stage: the default
-    * `"snapshot"` is the flat [[graft.state.SnapshotStore]] layout;
-    * `"registry"` reads the model's CURRENT promoted version through
-    * [[graft.state.ModelRegistry]] — the versioned production layer,
-    * so a declared chain serves the same pinned artifact the refresh
-    * loops publish, promotion/rollback-aware. Anything else fails
-    * loudly at parse time, not mid-chain. */
-  private def storeKind(fn: String, v: JValue): String = {
-    val kind = (v \ "store").extractOpt[String].getOrElse("snapshot")
-    require(kind == "snapshot" || kind == "registry",
-      s"function '$fn': unknown model store '$kind' " +
-        "(expected 'snapshot' or 'registry')")
-    kind
+  /** The frozen model a model stage (`lm_apply`, `lang_gate`,
+    * `margin_gate`, `ann_gate`) serves: `model_dir` is a
+    * [[graft.state.ModelRegistry]] root and `model` (default `dflt`) the
+    * model's name in it. The returned reader pins the CURRENT promoted
+    * version each time the stage is applied, so a chain scores one
+    * consistent version under concurrent refresh and a rollback takes
+    * effect on the next run. `store` may only be absent or
+    * `"registry"`: spec files are outside input, so any other value
+    * fails here, at parse time, not mid-chain. */
+  private def modelPin(fn: String, op: String, v: JValue, dflt: String)
+      : SparkSession => graft.state.ModelRegistry#Pinned = {
+    val store = (v \ "store").extractOpt[String]
+    require(store.forall(_ == "registry"),
+      s"function '$fn': $op serves registry-versioned models only; " +
+        s"unknown model store '${store.get}' (expected 'registry')")
+    val dir = (v \ "model_dir").extract[String]
+    val model = (v \ "model").extractOpt[String].getOrElse(dflt)
+    s => new graft.state.ModelRegistry(s, dir).snapshot(model)
   }
-
-  private def nbcModel(kind: String, dir: String, prefix: String,
-      df: DataFrame): graft.operators.NaiveBayes.NbcModel =
-    if (kind == "registry")
-      graft.operators.NaiveBayes.nbcFromRegistry(
-        new graft.state.ModelRegistry(df.sparkSession, dir)
-          .snapshot(prefix))
-    else graft.operators.NaiveBayes.nbcReadModel(
-      new graft.state.SnapshotStore(df.sparkSession, dir), prefix)
 
   private def parseStep(fn: String, v: JValue): DataFrame => DataFrame =
     (v \ "op").extract[String] match {
@@ -418,28 +410,18 @@ object SpecLoader {
         // mean token log-prob AGAINST A STORED MODEL clears the floor —
         // the production form of lm_perplexity (the gate LM is trained
         // once and frozen, never re-fit on the stage input; Wenzek et
-        // al. 2020). `model_dir`/`model` locate the artifact;
-        // `"store": "registry"` reads it through the VERSIONED
-        // [[graft.state.ModelRegistry]] (current promoted version,
-        // pinned at stage build — a chain keeps scoring a consistent
-        // model under concurrent refresh, and a rollback takes effect
-        // on the next run) instead of the flat SnapshotStore layout.
-        // Unscorable docs drop. The streaming twin is
+        // al. 2020). `model_dir`/`model` locate the artifact in a
+        // [[graft.state.ModelRegistry]] ([[modelPin]]). Unscorable docs
+        // drop. The streaming twin is
         // [[graft.streaming.StreamingLmGate]] over the same artifact.
         val c = (v \ "text").extract[String]
         val id = (v \ "id").extract[String]
-        val dir = (v \ "model_dir").extract[String]
-        val prefix = (v \ "model").extractOpt[String].getOrElse("lm")
-        val kind = storeKind(fn, v)
+        val model = modelPin(fn, "lm_apply", v, "lm")
         val floor = (v \ "min_lp_permille").extractOpt[Long].getOrElse(
           graft.operators.TextAnalysis.LmPerplexityFloorPermille)
         df => {
-          val m = if (kind == "registry")
-            graft.operators.TextAnalysis.kn3FromRegistry(
-              new graft.state.ModelRegistry(df.sparkSession, dir)
-                .snapshot(prefix))
-          else graft.operators.TextAnalysis.kn3ReadModel(
-            new graft.state.SnapshotStore(df.sparkSession, dir), prefix)
+          val m = graft.operators.TextAnalysis.kn3FromRegistry(
+            model(df.sparkSession))
           df.join(
             graft.operators.TextAnalysis.kn3Score(df, c, id, m)
               .filter(col("lp_permille") >= floor)
@@ -453,18 +435,17 @@ object SpecLoader {
         // declared keep-list — the CCNet front door (a pretrained
         // fastText-style lang-id model routes every crawl doc before
         // the LM gate; Wenzek et al. 2020). `model_dir`/`model` locate
-        // the SnapshotStore artifact ([[NaiveBayes.nbcStoreModel]]).
-        // The streaming twin is
+        // the registry artifact ([[NaiveBayes.nbcPublishModel]],
+        // [[modelPin]]). The streaming twin is
         // [[graft.streaming.StreamingClassifierGate]] over the same
         // artifact.
         val c = (v \ "text").extract[String]
         val id = (v \ "id").extract[String]
-        val dir = (v \ "model_dir").extract[String]
-        val prefix = (v \ "model").extractOpt[String].getOrElse("nbc")
-        val kind = storeKind(fn, v)
+        val model = modelPin(fn, "lang_gate", v, "nbc")
         val keep = (v \ "keep").extract[Seq[String]]
         df => graft.operators.NaiveBayes.nbcGate(df, c, id,
-          nbcModel(kind, dir, prefix, df), keep)
+          graft.operators.NaiveBayes.nbcFromRegistry(model(df.sparkSession)),
+          keep)
       case "margin_gate" =>
         // classifier-confidence selection (the GPT-3 quality-filter cut,
         // Brown et al. 2020 App. A): keep rows the STORED binary
@@ -475,14 +456,13 @@ object SpecLoader {
         // over the same artifact.
         val c = (v \ "text").extract[String]
         val id = (v \ "id").extract[String]
-        val dir = (v \ "model_dir").extract[String]
-        val prefix = (v \ "model").extractOpt[String].getOrElse("nbc")
-        val kind = storeKind(fn, v)
+        val model = modelPin(fn, "margin_gate", v, "nbc")
         val keepClass = (v \ "keep_class").extract[String]
         val minMargin = (v \ "min_margin_micros").extractOpt[Long]
           .getOrElse(0L)
         df => graft.operators.NaiveBayes.nbcMarginGate(df, c, id,
-          nbcModel(kind, dir, prefix, df), keepClass, minMargin)
+          graft.operators.NaiveBayes.nbcFromRegistry(model(df.sparkSession)),
+          keepClass, minMargin)
       case "lm_perplexity" =>
         // CCNet-style perplexity gate (Wenzek et al. 2020): keep rows
         // whose Kneser-Ney mean token log-prob — the LM trained on the
@@ -554,20 +534,11 @@ object SpecLoader {
           .getOrElse(vecId)
         val corpusCol = (v \ "corpus_col").extractOpt[String]
           .getOrElse(vecCol)
-        val dir = (v \ "model_dir").extract[String]
-        val prefix = (v \ "model").extractOpt[String].getOrElse("ann")
+        val model = modelPin(fn, "ann_gate", v, "ann")
         val tier = (v \ "tier").extractOpt[String].getOrElse("ivf")
         require(Set("ivf", "ivfpq", "sq8").contains(tier),
           s"function '$fn': unknown ann_gate tier '$tier' " +
             "(expected 'ivf', 'ivfpq' or 'sq8')")
-        // the ANN artifacts are registry-versioned only (every serve
-        // path pins an immutable version), so `store` DEFAULTS to
-        // registry here; a flat-store layout would silently skip the
-        // version pinning, so any other value is rejected at parse time
-        require((v \ "store").extractOpt[String]
-            .getOrElse("registry") == "registry",
-          s"function '$fn': ann_gate serves registry-versioned " +
-            "artifacts only (store: registry)")
         val k = (v \ "k").extractOpt[Int].getOrElse(5)
         val minTop = (v \ "min_top_permille").extractOpt[Long]
         val maxTop = (v \ "max_top_permille").extractOpt[Long]
@@ -576,8 +547,7 @@ object SpecLoader {
             "max_top_permille")
         df => {
           val s = df.sparkSession
-          val pin = new graft.state.ModelRegistry(s, dir)
-            .snapshot(prefix)
+          val pin = model(s)
           val queries = s.read.parquet(vecDir)
             .select(col(vecId).as("id"), col(vecCol).as("vec"))
             .join(df.select(col(id).as("id")), Seq("id"), "left_semi")

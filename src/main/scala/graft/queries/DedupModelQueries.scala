@@ -366,8 +366,8 @@ private[graft] object DedupModelQueries {
           |FROM l GROUP BY 1""".stripMargin)),
 
     // frozen-model LM tier: train the pruned trigram-KN on the even-id
-    // half, persist the six model tables through SnapshotStore's
-    // crash-safe pointer swap, reload, and score the held-out odd-id
+    // half, publish the six model tables as one ModelRegistry version
+    // (one manifest swap), pin it, and score the held-out odd-id
     // batch against the RELOADED artifact — the production train/apply
     // split of the whole scoring family (out-of-model contexts take the
     // shared KnOovLpMicro floor; see [[TextAnalysis.kn3Score]]).
@@ -439,8 +439,8 @@ private[graft] object DedupModelQueries {
           .replace("OOV", TextAnalysis.KnOovLpMicro.toString))),
 
     // frozen-classifier tier: train a multinomial Naive-Bayes char-
-    // trigram language classifier on the even-id half, persist its three
-    // model tables through SnapshotStore, reload, and classify the
+    // trigram language classifier on the even-id half, publish its three
+    // model tables as one ModelRegistry version, pin it, and classify the
     // held-out odd-id batch against the RELOADED artifact — the trained
     // counterpart of chargram_langid's heuristic profile overlap, and
     // the CCNet lang-id-gate production shape ([[NaiveBayes.nbcScore]]:

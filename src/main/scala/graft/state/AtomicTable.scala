@@ -47,8 +47,6 @@ class AtomicTable(spark: SparkSession, base: String) {
 
   private def dataDir(ver: String) = new Path(base, s"v-$ver")
 
-  def exists: Boolean = currentPtr(fs).isDefined
-
   /** All committed pointers as (counter, version name). */
   private def allPtrs(f: FileSystem): Seq[(Long, String)] = {
     val b = new Path(base)

@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (pruned-KN LM: six tables; Naive-Bayes classifier: three tables; ANN
   * index: centroids + codebook + assignments).
   *
-  * Why [[SnapshotStore.commitTable]] alone is not enough: each table
-  * commit is individually atomic, but a model is a SET of tables with a
+  * It is the engine's only model store. Why per-table commits are not
+  * enough: each table's pointer swap ([[AtomicTable.commit]]) is
+  * individually atomic, but a model is a SET of tables with a
   * cross-table consistency invariant (e.g. the NB grams table must count
   * exactly the docs the classes table counts). A refresh that re-commits
   * the tables one by one opens a window where a scorer reads grams vN+1

@@ -26,6 +26,10 @@ import graft.model.Schemas
   * post-image plan has (no caller passes [[commit]]'s `partitions`); the
   * reconcile join shuffles both sides on the key, or AQE broadcasts
   * whichever side turns out small.
+  *
+  * The store holds sync state only. Frozen models are sets of tables
+  * with a cross-table invariant, which per-table commits cannot publish
+  * atomically; they live in [[ModelRegistry]].
   */
 class SnapshotStore(spark: SparkSession, root: String) {
 
@@ -43,23 +47,5 @@ class SnapshotStore(spark: SparkSession, root: String) {
       postImage.repartition(partitions, postImage(Schemas.externalId))
     else postImage
     table(integration, function).commit(img)
-  }
-
-  /** Arbitrary-schema table commit — the persistence path for FROZEN
-    * MODEL artifacts (e.g. the pruned-KN tables of
-    * [[graft.operators.TextAnalysis.kn3StoreModel]]), which share the
-    * reconcile state's crash-safe pointer-swap publish but not its
-    * (key, hash) schema. A scoring job reading mid-commit sees the old
-    * model, never a torn one. */
-  def commitTable(integration: String, name: String, df: DataFrame): Unit =
-    table(integration, name).commit(df)
-
-  /** Read back a [[commitTable]] artifact; schema comes from the stored
-    * parquet footer (models are always committed before they are read —
-    * a missing table is a caller bug and fails loudly). */
-  def readTable(integration: String, name: String): DataFrame = {
-    val t = table(integration, name)
-    require(t.exists, s"model table $root/$integration/$name never committed")
-    t.read(null)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.{HcpIntegration, SyncDriver}
 import graft.sink.GraphSink
-import graft.state.{AtomicTable, SnapshotStore}
+import graft.state.{AtomicTable, ModelRegistry, SnapshotStore}
 import graft.streaming.{ChangeEvent, KeyedRecord, StatefulReconcile,
   StreamingSync}
 
@@ -70,8 +70,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     // restart with a healthy driver over the SAME sink root and store:
     // the un-committed function re-diffs its full delta (state is still
     // empty) and the idempotent MERGE absorbs the replayed write; the
-    // in-driver convergence check (verify=true) asserts the second diff
-    // is empty for every function
+    // in-driver convergence check (VERIFY, always on) asserts the second
+    // diff is empty for every function
     val healed = new GraphSink(spark, s"$rootB/graph")
     val r = new SyncDriver(spark, store, healed).run(spec)
     assert(r("buckets") === ((2L, 0L)), "replayed delta must re-apply")
@@ -259,15 +259,14 @@ class CrashRecoverySpec extends AnyFunSuite {
       (6L, "der hund und die katze schlafen auf dem teppich hier"),
       (8L, s"$boiler the cat and the dog today")
     ).toDF("doc_id", "text")
-    val storeDir = Files.createTempDirectory("graft-chaincrash-m").toString
-    val store = new SnapshotStore(spark, storeDir)
-    NaiveBayes.nbcStoreModel(nbcTrain, "text", "lang", store, "nbc")
-    graft.operators.TextAnalysis.kn3StoreModel(lmTrain, "text", "doc_id",
-      store, "lm")
-    val frozenNbc = NaiveBayes.nbcFreeze(NaiveBayes.nbcReadModel(store,
-      "nbc"))
-    val frozenLm = TextAnalysis.kn3Freeze(TextAnalysis.kn3ReadModel(
-      store, "lm"))
+    val reg = new ModelRegistry(spark,
+      Files.createTempDirectory("graft-chaincrash-m").toString)
+    NaiveBayes.nbcPublishModel(nbcTrain, "text", "lang", reg, "nbc")
+    TextAnalysis.kn3PublishModel(lmTrain, "text", "doc_id", reg, "lm")
+    val frozenNbc = NaiveBayes.nbcFreeze(NaiveBayes.nbcFromRegistry(
+      reg.snapshot("nbc")))
+    val frozenLm = TextAnalysis.kn3Freeze(TextAnalysis.kn3FromRegistry(
+      reg.snapshot("lm")))
 
     // batch 0: the boilerplate line enters line_dedup state via doc 1
     val batch0 = Seq(

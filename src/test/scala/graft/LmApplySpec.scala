@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextAnalysis
-import graft.state.SnapshotStore
+import graft.state.ModelRegistry
 
 /** The frozen-model LM tier's contract: persisting the pruned
-  * trigram-KN model through SnapshotStore and scoring against the
+  * trigram-KN model through ModelRegistry and scoring against the
   * RELOADED artifact must be indistinguishable from scoring against the
   * in-session model — and out-of-model contexts must take exactly the
   * shared OOV floor, nothing else changing. */
@@ -41,11 +41,11 @@ class LmApplySpec extends AnyFunSuite {
   test("apply-after-store equals score-in-session, row for row") {
     val inSession = TextAnalysis.kn3Score(batch, "text", "doc_id",
       TextAnalysis.kn3Model(train, "text", "doc_id"))
-    val store = new SnapshotStore(spark,
+    val reg = new ModelRegistry(spark,
       Files.createTempDirectory("graft-lmapply").toString)
-    TextAnalysis.kn3StoreModel(train, "text", "doc_id", store, "lm")
+    TextAnalysis.kn3PublishModel(train, "text", "doc_id", reg, "lm")
     val reloaded = TextAnalysis.kn3Score(batch, "text", "doc_id",
-      TextAnalysis.kn3ReadModel(store, "lm"))
+      TextAnalysis.kn3FromRegistry(reg.snapshot("lm")))
     val want = scores(inSession)
     assert(want.nonEmpty && want.map(_._1) === Seq(1L, 3L, 5L))
     assert(scores(reloaded) === want)
@@ -109,10 +109,10 @@ class LmApplySpec extends AnyFunSuite {
 
   test("stored model tables are the pruned artifact: no singleton " +
       "trigrams survive in kept, and types matches cont's row count") {
-    val store = new SnapshotStore(spark,
+    val reg = new ModelRegistry(spark,
       Files.createTempDirectory("graft-lmapply2").toString)
-    TextAnalysis.kn3StoreModel(train, "text", "doc_id", store, "lm")
-    val m = TextAnalysis.kn3ReadModel(store, "lm")
+    TextAnalysis.kn3PublishModel(train, "text", "doc_id", reg, "lm")
+    val m = TextAnalysis.kn3FromRegistry(reg.snapshot("lm"))
     assert(m.kept.filter(col("c123") < 2).count() === 0)
     assert(m.kept.count() > 0, "fixture must keep some trigrams")
     val b2 = m.types.as[Long].head()

@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.NaiveBayes
-import graft.state.SnapshotStore
+import graft.state.ModelRegistry
 
 /** Contract of the trained Naive-Bayes char-trigram classifier: the
   * distributed inverted-index scorer equals a from-first-principles
   * local reference (same add-1 rationals, same quantize-once-ln), the
-  * store round-trip is invisible to scoring, gram-less docs fall back to
+  * registry round-trip is invisible to scoring, gram-less docs fall back to
   * the prior, and the argmax tie-break is pinned. */
 class NaiveBayesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -127,11 +127,11 @@ class NaiveBayesSpec extends AnyFunSuite {
     val baDf = batch.toDF("doc_id", "lang", "text")
     val inSession = NaiveBayes.nbcScore(baDf, "text", "doc_id", "lang",
       NaiveBayes.nbcTrain(trDf, "text", "lang"))
-    val store = new SnapshotStore(spark,
+    val reg = new ModelRegistry(spark,
       Files.createTempDirectory("graft-nbc").toString)
-    NaiveBayes.nbcStoreModel(trDf, "text", "lang", store, "nbc")
+    NaiveBayes.nbcPublishModel(trDf, "text", "lang", reg, "nbc")
     val reloaded = NaiveBayes.nbcScore(baDf, "text", "doc_id", "lang",
-      NaiveBayes.nbcReadModel(store, "nbc"))
+      NaiveBayes.nbcFromRegistry(reg.snapshot("nbc")))
     val want = inSession.orderBy("doc_id")
       .as[(Long, String, String, Long)].collect().toSeq
     assert(want.nonEmpty)
@@ -188,11 +188,11 @@ class NaiveBayesSpec extends AnyFunSuite {
   test("streaming classifier gate == batch nbcGate on the same corpus, " +
       "and the declared lang_gate stage reads the stored artifact") {
     import java.nio.file.{Files, Paths}
-    val storeDir = Files.createTempDirectory("graft-nbc-gate").toString
-    val store = new SnapshotStore(spark, storeDir)
+    val regDir = Files.createTempDirectory("graft-nbc-gate").toString
+    val reg = new ModelRegistry(spark, regDir)
     val trDf = train.toDF("doc_id", "lang", "text")
-    NaiveBayes.nbcStoreModel(trDf, "text", "lang", store, "nbc")
-    val m = NaiveBayes.nbcReadModel(store, "nbc")
+    NaiveBayes.nbcPublishModel(trDf, "text", "lang", reg, "nbc")
+    val m = NaiveBayes.nbcFromRegistry(reg.snapshot("nbc"))
     val docs = (batch ++ Seq((9L, "de", "die katze und der hund"),
       (11L, "fr", "le chien et le chat"))).toDF("doc_id", "lang", "text")
     val keep = Set("en", "fr")
@@ -203,7 +203,7 @@ class NaiveBayesSpec extends AnyFunSuite {
 
     // declared-stage form over the same stored artifact
     val json = s"""{"steps":[{"op":"lang_gate","text":"text",
-      |"id":"doc_id","model_dir":"$storeDir","model":"nbc",
+      |"id":"doc_id","model_dir":"$regDir","model":"nbc",
       |"keep":["en","fr"]}]}""".stripMargin
     val staged = graft.pipeline.SpecLoader.stagesFromJson(json)
     assert(staged.map(_._1) === Seq("lang_gate"))
@@ -273,11 +273,11 @@ class NaiveBayesSpec extends AnyFunSuite {
       (3L, "aa", "a dog ran over the hill"),          // confident aa
       (5L, "bb", "zzq wwq vvq uuq"),                  // confident bb
       (7L, "aa", "zq wq the cat zq wq zq wq zq wq"))  // mixed/low margin
-    val storeDir = Files.createTempDirectory("graft-mgate").toString
-    val store = new SnapshotStore(spark, storeDir)
-    NaiveBayes.nbcStoreModel(tr.toDF("doc_id", "lang", "text"), "text",
-      "lang", store, "nbc")
-    val m = NaiveBayes.nbcReadModel(store, "nbc")
+    val regDir = Files.createTempDirectory("graft-mgate").toString
+    val reg = new ModelRegistry(spark, regDir)
+    NaiveBayes.nbcPublishModel(tr.toDF("doc_id", "lang", "text"), "text",
+      "lang", reg, "nbc")
+    val m = NaiveBayes.nbcFromRegistry(reg.snapshot("nbc"))
     val frozen = NaiveBayes.nbcFreeze(m)
     val baDf = ba.toDF("doc_id", "lang", "text")
     // local frozen margins == distributed, doc for doc
@@ -298,7 +298,7 @@ class NaiveBayesSpec extends AnyFunSuite {
     assert(want.nonEmpty && want.size < dist.count(_._2 == "aa"))
     // declared stage over the stored artifact
     val json = s"""{"steps":[{"op":"margin_gate","text":"text",
-      |"id":"doc_id","model_dir":"$storeDir","model":"nbc",
+      |"id":"doc_id","model_dir":"$regDir","model":"nbc",
       |"keep_class":"aa","min_margin_micros":$thr}]}""".stripMargin
     val staged = graft.pipeline.SpecLoader.stagesFromJson(json)
     assert(staged.head._2(baDf).select("doc_id").as[Long].collect()

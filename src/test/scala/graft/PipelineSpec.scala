@@ -74,7 +74,7 @@ class PipelineSpec extends AnyFunSuite {
     val r1 = driver.run(spec)
     assert(r1("buckets") === ((2L, 0L)) && r1("packer_build") === ((3L, 0L)))
     assert(sink.readEdges("creates__version__packer_build").count() === 3)
-    // delete pass in parallel too (exercises the detach lock)
+    // delete pass: node deletes detach the passthrough edges
     val specEmpty = HcpIntegration.spec("hcp-par",
       s => HcpFixture.doc(s, HcpFixture.emptyJson))
     val r2 = driver.run(specEmpty)
@@ -89,7 +89,8 @@ class PipelineSpec extends AnyFunSuite {
     val sink = new GraphSink(spark, s"$root/graph")
     val driver = new SyncDriver(spark, store, sink)
     // reconcile = true on the one relation runs applyEdgeDelta; node
-    // deletes run detachEdges on the same edge table
+    // deletes skip detachEdges here, because the relation's own diff
+    // deletes every pair whose endpoint vanished
     import graft.pipeline.{CreateNode, CreateRelation, FunctionSpec, IntegrationSpec}
     import graft.operators.HcpTransforms
     def spec(body: String) = IntegrationSpec("hcp-recon-edge",
@@ -108,8 +109,8 @@ class PipelineSpec extends AnyFunSuite {
     val r2 = driver.run(spec(HcpFixture.json))
     assert(r2.values.forall(_ == ((0L, 0L))))
 
-    // b2 vanishes upstream: node delete + detach + the reconciled edge
-    // diff's pair delete all land; (b1, v1) survives
+    // b2 vanishes upstream: the node delete and the reconciled edge
+    // diff's pair delete both land; (b1, v1) survives
     val onlyB1 = HcpFixture.json.replaceAll(
       """\{"id": "b2".*\]\}\}\s*""", "").replaceAll(",\\s*]", "]")
     val r3 = driver.run(spec(onlyB1))

@@ -352,9 +352,9 @@ class SpecLoaderSpec extends AnyFunSuite {
     assert(afterM.count() < df.count() && want.count() > 0)
   }
 
-  test("declared gates with store=registry serve the promoted " +
-      "ModelRegistry version, equal the snapshot-backed chain, and " +
-      "follow promotion/rollback across chain rebuilds") {
+  test("declared model gates serve the promoted ModelRegistry " +
+      "version, equal the same gates composed by hand, and follow " +
+      "promotion/rollback across chain rebuilds") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.operators.{NaiveBayes, TextAnalysis}
@@ -387,45 +387,81 @@ class SpecLoaderSpec extends AnyFunSuite {
     val reg = new graft.state.ModelRegistry(spark, regDir)
     NaiveBayes.nbcPublishModel(trainA, "text", "lang", reg, "nbc") // v1
     TextAnalysis.kn3PublishModel(lmTrain, "text", "doc_id", reg, "lm")
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft-snapchain").toString
-    val store = new graft.state.SnapshotStore(spark, storeDir)
-    NaiveBayes.nbcStoreModel(trainA, "text", "lang", store, "nbc")
-    TextAnalysis.kn3StoreModel(lmTrain, "text", "doc_id", store, "lm")
 
-    def chain(dir: String, kind: String): Set[Long] =
+    // `store` spelled out on one stage and left out on the other: both
+    // forms read the registry
+    def chain(): Set[Long] =
       SpecLoader.transformFromJson(
         s"""{"name": "regchain", "steps": [
            |  {"op": "lang_gate", "text": "text", "id": "doc_id",
-           |   "model_dir": "$dir", "model": "nbc", "store": "$kind",
+           |   "model_dir": "$regDir", "model": "nbc", "store": "registry",
            |   "keep": ["en", "de"]},
            |  {"op": "lm_apply", "text": "text", "id": "doc_id",
-           |   "model_dir": "$dir", "model": "lm", "store": "$kind",
+           |   "model_dir": "$regDir", "model": "lm",
            |   "min_lp_permille": -10000} ] }""".stripMargin)(docs)
         .select("doc_id").as[Long].collect().toSet
 
-    // same artifacts, two store layers -> identical survivors
-    val viaRegistry = chain(regDir, "registry")
-    assert(viaRegistry === chain(storeDir, "snapshot"))
+    // the same two gates composed by hand over the in-session models
+    val langKept = NaiveBayes.nbcGate(docs, "text", "doc_id",
+      NaiveBayes.nbcTrain(trainA, "text", "lang"), Seq("en", "de"))
+    val byHand = langKept.join(
+        TextAnalysis.kn3Score(langKept, "text", "doc_id",
+            TextAnalysis.kn3Model(lmTrain, "text", "doc_id"))
+          .filter(col("lp_permille") >= -10000L).select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
+      .select("doc_id").as[Long].collect().toSet
+    val viaRegistry = chain()
+    assert(viaRegistry === byHand)
     assert(viaRegistry.nonEmpty && viaRegistry.size < docs.count())
 
     // a refresh PROMOTES v2: the next chain build serves the new model
     NaiveBayes.nbcPublishModel(trainB, "text", "lang", reg, "nbc") // v2
-    val viaV2 = chain(regDir, "registry")
+    val viaV2 = chain()
     assert(viaV2 !== viaRegistry,
       "v2 was trained on disjoint text; the gate decisions must move")
     // rollback re-promotes v1 -> the chain serves v1's decisions again
     reg.rollback("nbc")
-    assert(chain(regDir, "registry") === viaRegistry)
+    assert(chain() === viaRegistry)
+  }
 
-    // unknown store kinds fail loudly at parse time
-    val e = intercept[IllegalArgumentException](
-      SpecLoader.transformFromJson(
-        """{"name": "bad", "steps": [
-          |  {"op": "lang_gate", "text": "text", "id": "doc_id",
-          |   "model_dir": "/x", "store": "s3", "keep": ["en"]} ] }"""
-          .stripMargin))
-    assert(e.getMessage.contains("unknown model store"))
+  // one spec per model stage, complete but for the model location
+  private val modelStages = Seq(
+    "lm_apply" -> """"text": "text", "id": "doc_id"""",
+    "lang_gate" -> """"text": "text", "id": "doc_id", "keep": ["en"]""",
+    "margin_gate" ->
+      """"text": "text", "id": "doc_id", "keep_class": "hq"""",
+    "ann_gate" ->
+      """"id": "doc_id", "vec_dir": "/x", "min_top_permille": 1""")
+
+  test("model stages read ModelRegistry only: any other 'store' fails " +
+      "at parse time and names the stage") {
+    for ((op, fields) <- modelStages; store <- Seq("snapshot", "s3")) {
+      val e = intercept[IllegalArgumentException](
+        SpecLoader.transformFromJson(
+          s"""{"name": "bad", "steps": [
+             |  {"op": "$op", $fields, "model_dir": "/x",
+             |   "store": "$store"} ] }""".stripMargin))
+      assert(e.getMessage.contains(
+        s"$op serves registry-versioned models only"), s"$op/$store")
+      assert(e.getMessage.contains(s"unknown model store '$store'"),
+        s"$op/$store")
+    }
+  }
+
+  test("a model stage over a registry root with no published model " +
+      "fails with 'model never published'") {
+    import spark.implicits._
+    val empty = java.nio.file.Files
+      .createTempDirectory("graft-noreg").toString
+    val docs = Seq((1L, "the cat sat on the mat")).toDF("doc_id", "text")
+    for ((op, fields) <- modelStages) {
+      val stage = SpecLoader.transformFromJson(
+        s"""{"name": "unpublished", "steps": [
+           |  {"op": "$op", $fields,
+           |   "model_dir": "$empty"} ] }""".stripMargin)
+      val e = intercept[IllegalArgumentException](stage(docs))
+      assert(e.getMessage.contains("model never published"), op)
+    }
   }
 
   test("declared ann_gate equals the hand-composed stored-IVF retrieval " +
@@ -551,10 +587,10 @@ class SpecLoaderSpec extends AnyFunSuite {
 
     // artifacts behind the two documented placeholders
     val boiler = "breaking news update follows"
-    val storeDir = java.nio.file.Files
+    val regDir = java.nio.file.Files
       .createTempDirectory("graft-readme").toString
-    val store = new graft.state.SnapshotStore(spark, storeDir)
-    NaiveBayes.nbcStoreModel(Seq(
+    val reg = new graft.state.ModelRegistry(spark, regDir)
+    NaiveBayes.nbcPublishModel(Seq(
       (100L, "en", "the cat sat on the mat and slept all day long"),
       (101L, "en", "we walked to the market and bought fresh bread " +
         "every morning"),
@@ -564,8 +600,8 @@ class SpecLoaderSpec extends AnyFunSuite {
       (106L, "de", "die katze sitzt auf der matte und schlaeft jetzt"),
       (108L, "fr", "zzq wwq vvq uuq ttq ssq rrq qqq ppq ooq"),
       (110L, "fr", "qqz wwz vvz uuz ttz ssz rrz zzz ppz ooz")
-    ).toDF("doc_id", "lang", "text"), "text", "lang", store, "nbc")
-    NaiveBayes.nbcStoreModel(Seq(
+    ).toDF("doc_id", "lang", "text"), "text", "lang", reg, "nbc")
+    NaiveBayes.nbcPublishModel(Seq(
       (200L, "hq", "the cat sat on the mat and slept all day long"),
       (202L, "hq", "a dog ran over the hill and far away it went"),
       (204L, "hq", s"$boiler the cat and the dog today"),
@@ -574,15 +610,15 @@ class SpecLoaderSpec extends AnyFunSuite {
       (206L, "hq", "der hund und die katze schlafen auf dem teppich"),
       (208L, "lq", "buy now click here free offer limited deal"),
       (210L, "lq", "free offer click now buy deal limited wins today")
-    ).toDF("doc_id", "lang", "text"), "text", "lang", store, "qual")
-    TextAnalysis.kn3StoreModel(Seq(
+    ).toDF("doc_id", "lang", "text"), "text", "lang", reg, "qual")
+    TextAnalysis.kn3PublishModel(Seq(
       (0L, "the cat sat on the mat and then the cat slept"),
       (2L, "the cat sat on the mat and the dog sat too"),
       (4L, "the cat sat on the mat and slept all day long"),
       (6L, "a dog ran over the hill and far away it went"),
       (8L, "der hund und die katze schlafen auf dem teppich hier"),
       (10L, s"$boiler the cat and the dog today")
-    ).toDF("doc_id", "text"), "text", "doc_id", store, "lm")
+    ).toDF("doc_id", "text"), "text", "doc_id", reg, "lm")
     val vecDir = java.nio.file.Files
       .createTempDirectory("graft-readme-emb").toString + "/emb"
     // doc 1 (the boilerplate-news doc) is its own topic; every other
@@ -593,7 +629,7 @@ class SpecLoaderSpec extends AnyFunSuite {
         if (i == 1) Seq(0.1, 1.0, 0.2, 0.3)
         else Seq(1.0, 0.1, 0.01 * i, 0.2)))
       .toDF("vec_id", "embedding").write.parquet(vecDir)
-    val json = docJson.replace("<model-store>", storeDir)
+    val json = docJson.replace("<model-registry>", regDir)
       .replace("<embeddings-table>", vecDir)
 
     // the documented 10-document fixture: one verbatim duplicate (10),

@@ -186,7 +186,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
   private val mixWidth = 4
   private val mixRates = Map("en" -> 700000L, "de" -> 1000000L)
 
-  private def mixChainJson(storeDir: String): String = {
+  private def mixChainJson(regDir: String): String = {
     val rates = mixRates.map { case (k, v) => s""""$k": $v""" }
       .mkString(", ")
     s"""{"name": "mixed_chain", "steps": [
@@ -194,7 +194,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
        |  {"op": "line_dedup", "text": "text", "id": "doc_id",
        |   "width": $mixWidth, "max_doc_freq": 1},
        |  {"op": "lm_apply", "text": "text", "id": "doc_id",
-       |   "model_dir": "$storeDir", "min_lp_permille": $mixFloor},
+       |   "model_dir": "$regDir", "min_lp_permille": $mixFloor},
        |  {"op": "mixture_resample", "id": "doc_id", "strata": "lang",
        |   "rate_ppm": { $rates }} ] }""".stripMargin
   }
@@ -211,10 +211,10 @@ class StreamingFunnelSpec extends AnyFunSuite {
       (8L, "a dog ran over the hill and then came back home"),
       (10L, "breaking news update follows the cat and the dog today")
     ).toDF("doc_id", "text")
-    val storeDir = Files.createTempDirectory("graft-mixlm").toString
-    val store = new graft.state.SnapshotStore(spark, storeDir)
-    TextAnalysis.kn3StoreModel(train, "text", "doc_id", store, "lm")
-    val chainJson = mixChainJson(storeDir)
+    val regDir = Files.createTempDirectory("graft-mixlm").toString
+    val reg = new graft.state.ModelRegistry(spark, regDir)
+    TextAnalysis.kn3PublishModel(train, "text", "doc_id", reg, "lm")
+    val chainJson = mixChainJson(regDir)
 
     // batch truth: the DECLARED chain through funnelFromJson
     val docsDf = mixDocs.toDF("doc_id", "text", "lang")
@@ -225,7 +225,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
     // streaming: same declared JSON drives the stateless stage; the
     // stateful/model stages are substituted by their twins
     val frozen = TextAnalysis.kn3Freeze(
-      TextAnalysis.kn3ReadModel(store, "lm"))
+      TextAnalysis.kn3FromRegistry(reg.snapshot("lm")))
     val parsed = SpecLoader.stagesFromJson(chainJson)
     assert(parsed.map(_._1) ===
       Seq("normalize", "line_dedup", "lm_apply", "mixture_resample"))
@@ -287,7 +287,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
   // The CCNet front door added: lang_gate (frozen trained classifier)
   // BEFORE the LM gate — the full production shape (Wenzek et al. 2020
   // routes every crawl doc through a pretrained lang-id model first).
-  // Both frozen artifacts ride ONE SnapshotStore; every stage boundary
+  // Both frozen artifacts ride ONE ModelRegistry; every stage boundary
   // stays observable and batch≡stream.
   // ------------------------------------------------------------------
 
@@ -313,10 +313,10 @@ class StreamingFunnelSpec extends AnyFunSuite {
       (6L, "the cat sat on the mat again and again and again"),
       (8L, "der hund und die katze schlafen auf dem teppich hier")
     ).toDF("doc_id", "text")
-    val storeDir = Files.createTempDirectory("graft-ccnet").toString
-    val store = new graft.state.SnapshotStore(spark, storeDir)
-    NaiveBayes.nbcStoreModel(nbcTrainDocs, "text", "lang", store, "nbc")
-    TextAnalysis.kn3StoreModel(lmTrain, "text", "doc_id", store, "lm")
+    val regDir = Files.createTempDirectory("graft-ccnet").toString
+    val reg = new graft.state.ModelRegistry(spark, regDir)
+    NaiveBayes.nbcPublishModel(nbcTrainDocs, "text", "lang", reg, "nbc")
+    TextAnalysis.kn3PublishModel(lmTrain, "text", "doc_id", reg, "lm")
 
     // corpus: doc 11 is english-charactered but OOV to the LM (only the
     // lm gate can drop it); docs 5/10 are junk-alphabet (the classifier
@@ -331,12 +331,12 @@ class StreamingFunnelSpec extends AnyFunSuite {
       s"""{"name": "ccnet_chain", "steps": [
          |  {"op": "normalize", "col": "text"},
          |  {"op": "lang_gate", "text": "text", "id": "doc_id",
-         |   "model_dir": "$storeDir", "model": "nbc",
+         |   "model_dir": "$regDir", "model": "nbc",
          |   "keep": ["de", "en"]},
          |  {"op": "line_dedup", "text": "text", "id": "doc_id",
          |   "width": $mixWidth, "max_doc_freq": 1},
          |  {"op": "lm_apply", "text": "text", "id": "doc_id",
-         |   "model_dir": "$storeDir", "min_lp_permille": $mixFloor},
+         |   "model_dir": "$regDir", "min_lp_permille": $mixFloor},
          |  {"op": "mixture_resample", "id": "doc_id", "strata": "lang",
          |   "rate_ppm": { $rates }} ] }""".stripMargin
 
@@ -348,9 +348,9 @@ class StreamingFunnelSpec extends AnyFunSuite {
 
     // streaming: same JSON for the stateless stage, twins for the rest
     val frozenNbc = NaiveBayes.nbcFreeze(
-      NaiveBayes.nbcReadModel(store, "nbc"))
+      NaiveBayes.nbcFromRegistry(reg.snapshot("nbc")))
     val frozenLm = TextAnalysis.kn3Freeze(
-      TextAnalysis.kn3ReadModel(store, "lm"))
+      TextAnalysis.kn3FromRegistry(reg.snapshot("lm")))
     val parsed = SpecLoader.stagesFromJson(chainJson)
     assert(parsed.map(_._1) === Seq("normalize", "lang_gate",
       "line_dedup", "lm_apply", "mixture_resample"))
@@ -427,7 +427,7 @@ class StreamingFunnelSpec extends AnyFunSuite {
       "batch == streaming, stage by stage") {
     import graft.operators.NaiveBayes
     val boiler = "breaking news update follows"
-    // three artifacts in one store: lang-id (nbc), quality (qual), LM
+    // three artifacts in one registry: lang-id (nbc), quality (qual), LM
     val nbcTrainDocs = Seq(
       (100L, "en", "the cat sat on the mat and slept all day long"),
       (101L, "en", "we walked to the market and bought fresh bread every " +
@@ -457,11 +457,11 @@ class StreamingFunnelSpec extends AnyFunSuite {
       (8L, "der hund und die katze schlafen auf dem teppich hier"),
       (10L, s"$boiler the cat and the dog today")
     ).toDF("doc_id", "text")
-    val storeDir = Files.createTempDirectory("graft-3way").toString
-    val store = new graft.state.SnapshotStore(spark, storeDir)
-    NaiveBayes.nbcStoreModel(nbcTrainDocs, "text", "lang", store, "nbc")
-    NaiveBayes.nbcStoreModel(qualTrainDocs, "text", "lang", store, "qual")
-    TextAnalysis.kn3StoreModel(lmTrain, "text", "doc_id", store, "lm")
+    val regDir = Files.createTempDirectory("graft-3way").toString
+    val reg = new graft.state.ModelRegistry(spark, regDir)
+    NaiveBayes.nbcPublishModel(nbcTrainDocs, "text", "lang", reg, "nbc")
+    NaiveBayes.nbcPublishModel(qualTrainDocs, "text", "lang", reg, "qual")
+    TextAnalysis.kn3PublishModel(lmTrain, "text", "doc_id", reg, "lm")
 
     // corpus: one kill per gate, in gate order
     val docs = Seq(
@@ -482,13 +482,13 @@ class StreamingFunnelSpec extends AnyFunSuite {
       s"""{"name": "ccnet_margin_chain", "steps": [
          |  {"op": "normalize", "col": "text"},
          |  {"op": "lang_gate", "text": "text", "id": "doc_id",
-         |   "model_dir": "$storeDir", "model": "nbc",
+         |   "model_dir": "$regDir", "model": "nbc",
          |   "keep": ["de", "en"]},
          |  {"op": "margin_gate", "text": "text", "id": "doc_id",
-         |   "model_dir": "$storeDir", "model": "qual",
+         |   "model_dir": "$regDir", "model": "qual",
          |   "keep_class": "hq", "min_margin_micros": 0},
          |  {"op": "lm_apply", "text": "text", "id": "doc_id",
-         |   "model_dir": "$storeDir", "min_lp_permille": $mixFloor},
+         |   "model_dir": "$regDir", "min_lp_permille": $mixFloor},
          |  {"op": "line_dedup", "text": "text", "id": "doc_id",
          |   "width": $mixWidth, "max_doc_freq": 1},
          |  {"op": "mixture_resample", "id": "doc_id", "strata": "lang",
@@ -501,9 +501,9 @@ class StreamingFunnelSpec extends AnyFunSuite {
       declaredStages.map { case (i, op, _, out) => (i, op, out) }
 
     // WAY 2: the operators composed by hand — no SpecLoader anywhere
-    val mNbc = NaiveBayes.nbcReadModel(store, "nbc")
-    val mQual = NaiveBayes.nbcReadModel(store, "qual")
-    val mLm = TextAnalysis.kn3ReadModel(store, "lm")
+    val mNbc = NaiveBayes.nbcFromRegistry(reg.snapshot("nbc"))
+    val mQual = NaiveBayes.nbcFromRegistry(reg.snapshot("qual"))
+    val mLm = TextAnalysis.kn3FromRegistry(reg.snapshot("lm"))
     val h0 = docs.withColumn("text",
       TextAnalysis.normalizeText(col("text")))
     val h1 = NaiveBayes.nbcGate(h0, "text", "doc_id", mNbc,
