@@ -513,8 +513,9 @@ object SpecLoader {
         // without one drop, the cluster_mixture contract) retrieves its
         // top-k neighbors from the registry-versioned index tier
         // (`tier`: ivf | ivfpq | sq8 — the ann_apply serve paths,
-        // pinned at stage build so a chain keeps a consistent index
-        // under concurrent refresh), and the row is kept by its TOP-1
+        // pinned when the stage runs ([[modelPin]]) so a chain keeps a
+        // consistent index under concurrent refresh), and the row is
+        // kept by its TOP-1
         // cosine: `min_top_permille` keeps rows at least that similar
         // to the indexed corpus (domain/topic selection — the
         // retrieval form of margin_gate), `max_top_permille` keeps rows

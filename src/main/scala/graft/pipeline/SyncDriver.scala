@@ -141,14 +141,10 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
           sink.applyNodeDelta(label, delta.toCreate, delta.toDelete)
           if (deleted > 0) {
             // DETACH DELETE semantics (reference neo4j.go:117): edges
-            // touching a deleted node go with it. Only passthrough
-            // relations need it: a reconciled relation's own diff
-            // deletes every pair whose endpoint vanished, because its
-            // keys are endpoint-resolved before the diff.
+            // touching a deleted node go with it.
             spec.functions.foreach { other =>
               other.kind match {
-                case CreateRelation(rt, la, lb, false)
-                    if la == label || lb == label =>
+                case CreateRelation(rt, la, lb, _) if la == label || lb == label =>
                   sink.detachEdges(edgeTable(rt, la, lb),
                     if (la == label) delta.toDelete else emptyKeys(),
                     if (lb == label) delta.toDelete else emptyKeys())

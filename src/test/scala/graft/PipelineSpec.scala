@@ -89,8 +89,7 @@ class PipelineSpec extends AnyFunSuite {
     val sink = new GraphSink(spark, s"$root/graph")
     val driver = new SyncDriver(spark, store, sink)
     // reconcile = true on the one relation runs applyEdgeDelta; node
-    // deletes skip detachEdges here, because the relation's own diff
-    // deletes every pair whose endpoint vanished
+    // deletes run detachEdges on the same edge table
     import graft.pipeline.{CreateNode, CreateRelation, FunctionSpec, IntegrationSpec}
     import graft.operators.HcpTransforms
     def spec(body: String) = IntegrationSpec("hcp-recon-edge",
@@ -109,8 +108,8 @@ class PipelineSpec extends AnyFunSuite {
     val r2 = driver.run(spec(HcpFixture.json))
     assert(r2.values.forall(_ == ((0L, 0L))))
 
-    // b2 vanishes upstream: the node delete and the reconciled edge
-    // diff's pair delete both land; (b1, v1) survives
+    // b2 vanishes upstream: node delete + detach + the reconciled edge
+    // diff's pair delete all land; (b1, v1) survives
     val onlyB1 = HcpFixture.json.replaceAll(
       """\{"id": "b2".*\]\}\}\s*""", "").replaceAll(",\\s*]", "]")
     val r3 = driver.run(spec(onlyB1))
