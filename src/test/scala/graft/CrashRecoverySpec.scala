@@ -84,6 +84,124 @@ class CrashRecoverySpec extends AnyFunSuite {
       .foreach(fn => assert(r2(fn) === ((0L, 0L)), s"fn=$fn"))
   }
 
+  /** The churn pass after [[HcpFixture.json]]: b1 (with v1 and bl1)
+    * vanishes, b2 is renamed, and b3 arrives under a new org and project
+    * with v3 and bl4 — node deletes, updates and creates, plus new pairs
+    * in every edge table. */
+  private val churnJson = """{"buckets": [
+    |  {"id": "b2", "name": "app-img-2", "created-at": "2024-02-01T00:00:00Z",
+    |   "updated-at": "2024-08-01T00:00:00Z", "resource_name": "packer/b2",
+    |   "location": {"organization_id": "org1", "project_id": "proj1"},
+    |   "latest_version": {"id": "v2", "name": "v2.3",
+    |     "builds": [{"id": "bl2", "created_at": "2024-07-01T00:00:00Z",
+    |                 "updated_at": "2024-07-01T01:00:00Z"},
+    |                {"id": "bl3", "created_at": "2024-07-02T00:00:00Z",
+    |                 "updated_at": "2024-07-02T01:00:00Z"}]}},
+    |  {"id": "b3", "name": "db-img", "created-at": "2024-03-01T00:00:00Z",
+    |   "updated-at": "2024-08-01T00:00:00Z", "resource_name": "packer/b3",
+    |   "location": {"organization_id": "org2", "project_id": "proj2"},
+    |   "latest_version": {"id": "v3", "name": "v3.0",
+    |     "builds": [{"id": "bl4", "created_at": "2024-08-01T00:00:00Z",
+    |                 "updated_at": "2024-08-01T01:00:00Z"}]}}
+    |]}""".stripMargin.replaceAll("\n", " ")
+
+  /** Counts the writes of a sink and store pair and throws right after
+    * write `crashAt` lands (0: never); `kinds` names each landed write. */
+  private final class Writes(crashAt: Int) {
+    val kinds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def landed(kind: String): Unit = {
+      kinds.add(kind)
+      if (kinds.size == crashAt)
+        throw new RuntimeException(s"injected crash after write $crashAt")
+    }
+  }
+
+  private def countedDriver(root: String, w: Writes): SyncDriver = {
+    val store = new SnapshotStore(spark, s"$root/state") {
+      override def commit(integration: String, function: String,
+          postImage: DataFrame, partitions: Int): Unit = {
+        super.commit(integration, function, postImage, partitions)
+        w.landed("state commit")
+      }
+    }
+    val sink = new GraphSink(spark, s"$root/graph") {
+      override def applyNodeDelta(label: String, toCreate: DataFrame,
+          toDelete: DataFrame): Unit = {
+        super.applyNodeDelta(label, toCreate, toDelete)
+        w.landed("node apply")
+      }
+      override def detachEdges(relType: String, deletedA: DataFrame,
+          deletedB: DataFrame): Unit = {
+        super.detachEdges(relType, deletedA, deletedB)
+        w.landed("detach")
+      }
+      override def mergeEdges(relType: String, edges: DataFrame,
+          labelA: String, labelB: String): Unit = {
+        super.mergeEdges(relType, edges, labelA, labelB)
+        w.landed("edge write")
+      }
+      override def applyEdgeDelta(relType: String, toCreate: DataFrame,
+          deletePairs: DataFrame, labelA: String, labelB: String,
+          alreadyResolved: Boolean): Unit = {
+        super.applyEdgeDelta(relType, toCreate, deletePairs, labelA, labelB,
+          alreadyResolved)
+        w.landed("edge write")
+      }
+    }
+    new SyncDriver(spark, store, sink)
+  }
+
+  private def copyTree(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val dst = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst)
+      else Files.copy(p, dst)
+    } finally walk.close()
+  }
+
+  test("churn pass with node deletes: a crash right after any one write " +
+      "lands (each DETACH, node apply, state commit and edge write), then " +
+      "a restart on the same document, ends with the uninterrupted run's " +
+      "graph and state") {
+    def spec(body: String) =
+      HcpIntegration.spec("hcp-churn-crash", s => HcpFixture.doc(s, body))
+    def dump(root: String): Seq[String] = {
+      val store = new SnapshotStore(spark, s"$root/state")
+      tableDump(new GraphSink(spark, s"$root/graph")) ++
+        spec(churnJson).functions.flatMap(fn =>
+          store.read("hcp-churn-crash", fn.name).toJSON.collect().sorted
+            .map(s"${fn.name} " + _))
+    }
+
+    // the full load, shared by every crashed run as a copied directory
+    val loaded = Files.createTempDirectory("graft-churn-load").toString
+    countedDriver(loaded, new Writes(0)).run(spec(HcpFixture.json))
+
+    // the uninterrupted churn pass, counting its writes
+    val twin = Files.createTempDirectory("graft-churn-twin").toString
+    copyTree(loaded, twin)
+    val all = new Writes(0)
+    countedDriver(twin, all).run(spec(churnJson))
+    val kinds = all.kinds.toArray(Array.empty[String]).toSeq
+    assert(Set("detach", "node apply", "state commit", "edge write")
+      .subsetOf(kinds.toSet), s"writes of the churn pass: $kinds")
+    val want = dump(twin)
+
+    for (k <- 1 to kinds.size) {
+      val root = Files.createTempDirectory(s"graft-churn-crash$k").toString
+      copyTree(loaded, root)
+      val boom = intercept[RuntimeException] {
+        countedDriver(root, new Writes(k)).run(spec(churnJson))
+      }
+      assert(boom.getMessage === s"injected crash after write $k")
+      countedDriver(root, new Writes(0)).run(spec(churnJson))
+      assert(dump(root) === want, s"restart after a crash at write $k " +
+        s"(${kinds(k - 1)}) of $kinds")
+    }
+  }
+
   test("streaming sync: crash inside foreachBatch, restart from the " +
       "checkpoint replays the batch and converges") {
     val spec = HcpIntegration.spec("hcp-scrash", s => HcpFixture.doc(s))
