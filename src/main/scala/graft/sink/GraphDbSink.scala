@@ -106,6 +106,9 @@ class GraphDbWriter(txFactory: GraphTxFactory, batchSize: Int = 1000)
   *    remote DETACH already did);
   *  - edge creates forward the RESOLVED pair set; the remote `MATCH`
   *    re-drops anything dangling (there should be none — same input).
+  *    [[graft.pipeline.SyncDriver]] hands a passthrough table only the
+  *    pairs it lacks, so a pass forwards only new pairs; MERGE makes a
+  *    re-sent pair harmless either way.
   */
 class MirroredGraphSink(spark: SparkSession, root: String,
     writer: GraphDbWriter)

@@ -1,9 +1,15 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
+import graft.state.AtomicTable
+import graft.state.AtomicTable.{masked, notIn}
 
 /** Property-graph sink with the reference's Cypher semantics (reference
   * `internal/store/neo4j.go`), materialized as one parquet [[graft.state
@@ -18,21 +24,32 @@ import graft.model.Schemas
   *   semi-join resolution against both endpoint node tables (dropping
   *   dangling edges exactly as MATCH does), then idempotent dedup-append.
   * - [[applyEdgeDelta]] applies a reconciled relation's pair creates and
-  *   deletes.
-  * - every write reads the whole table, applies the delta and publishes
-  *   the new image as one atomic version swap — the analog of the
-  *   reference's single bolt transaction (`neo4j.go:77-81`).
+  *   deletes, or a passthrough relation's new pairs.
+  * - every write publishes the new image as one atomic version swap — the
+  *   analog of the reference's single bolt transaction (`neo4j.go:77-81`).
   *
-  * The whole-table rewrite is deliberate: on the `sync_steady` benchmark a
-  * hash-bucketed partial-rewrite layout spent more on the jobs that find
-  * the touched buckets than the rewrite it saved (ROADMAP direction 2).
+  * Two plans per write, chosen by the arguments alone:
+  * - *Driver-local delta* (every argument's plan is a `LocalRelation`, as
+  *   [[graft.pipeline.SyncDriver]] passes a delta within Spark's broadcast
+  *   threshold): the image is the table minus the delta's keys as a
+  *   literal `NOT IN` mask, plus the delta rows — one scan-and-write job,
+  *   no shuffle. Like Delta Lake's touched-key pruning of `MERGE`
+  *   (Armbrust et al., VLDB 2020), only the delta decides what changes.
+  * - *Distributed delta* (any other argument): anti-joins against the
+  *   delta and a `dropDuplicates` on the key, several jobs.
+  *
+  * Either way the write scans and rewrites the whole table: on the
+  * `sync_steady` benchmark a hash-bucketed partial-rewrite layout spent
+  * more on the jobs that find the touched buckets than the rewrite it
+  * saved (ROADMAP direction 2).
   */
 class GraphSink(spark: SparkSession, root: String) {
+  import GraphSink._
 
   private val key = Schemas.externalId
 
   private def table(kind: String, name: String) =
-    new graft.state.AtomicTable(spark, s"$root/$kind/$name")
+    new AtomicTable(spark, s"$root/$kind/$name")
 
   def readNodes(label: String, schema: org.apache.spark.sql.types.StructType = null): DataFrame =
     table("nodes", label).read(schema)
@@ -44,19 +61,29 @@ class GraphSink(spark: SparkSession, root: String) {
     * key match — `SET x = item`) and deletes (by key) to the node table as
     * ONE crash-safe version swap (K5 transaction analog).
     *
-    * Duplicate keys inside toCreate are collapsed to one arbitrary winner
-    * (the table invariant is one row per key, matching MERGE); callers who
-    * need a deterministic winner apply [[graft.operators.Transforms
-    * .lastWinsByKey]] upstream — a distributed bag has no "last" without an
-    * explicit order (reference batch order, `neo4j.go:87-88`). */
+    * Duplicate keys inside toCreate collapse to one winner, since the
+    * table invariant is one row per key, matching MERGE: the last row in
+    * list order when both sides are driver-local (the reference's batch
+    * order, `neo4j.go:87-88`), else an arbitrary one — a distributed bag
+    * has no "last". Callers who need a deterministic winner of a
+    * distributed batch apply [[graft.operators.Transforms.lastWinsByKey]]
+    * upstream. */
   def applyNodeDelta(label: String, toCreate: DataFrame,
       toDelete: DataFrame): Unit = {
     val existing = readNodes(label, toCreate.schema)
-    val survivors = existing
-      .join(toDelete.select(col(key)), Seq(key), "left_anti")
-      .join(toCreate.select(col(key)), Seq(key), "left_anti")
-    table("nodes", label)
-      .commit(survivors.unionByName(toCreate.dropDuplicates(key)))
+    val image = (localRows(toCreate), localRows(toDelete)) match {
+      case (Some(creates), Some(deletes)) =>
+        val winners = creates.map(r => r.getAs[Any](key) -> r).toMap
+        masked(existing, notIn(col(key),
+          winners.keys ++ deletes.map(_.getAs[Any](key))),
+          local(winners.values.toSeq, toCreate.schema))
+      case _ =>
+        existing
+          .join(toDelete.select(col(key)), Seq(key), "left_anti")
+          .join(toCreate.select(col(key)), Seq(key), "left_anti")
+          .unionByName(toCreate.dropDuplicates(key))
+    }
+    table("nodes", label).commit(image)
   }
 
   /** Endpoint resolution == Cypher `MATCH (a),(b)` before the edge MERGE
@@ -86,34 +113,80 @@ class GraphSink(spark: SparkSession, root: String) {
       .commit(existing.unionByName(resolved).dropDuplicates("a_id", "b_id"))
   }
 
-  /** Reconciled-edge mode: one transaction applying resolved creates and
-    * pair-keyed deletes to the edge table (the engine's stale-edge fix —
-    * the reference never deletes relationships, `neo4j.go:119-120`).
-    * `alreadyResolved = true` skips the endpoint MATCH when the caller
-    * has resolved `toCreate` itself (the reconciled-edge driver does,
-    * BEFORE its diff) — node tables don't change between those two points
-    * (nodes sync before edges), so re-resolving would only re-scan both
-    * node tables for an identical result. */
+  /** One transaction applying resolved pair creates and pair-keyed deletes
+    * to the edge table: a reconciled relation's delta (the engine's
+    * stale-edge fix — the reference never deletes relationships,
+    * `neo4j.go:119-120`), or, with no deletes, a passthrough relation's
+    * new pairs. `alreadyResolved = true` skips the endpoint MATCH when the
+    * caller has resolved `toCreate` itself (the driver does) — node tables
+    * don't change between those two points (nodes sync before edges), so
+    * re-resolving would only re-scan both node tables for an identical
+    * result. Only resolved pairs can take the driver-local plan. */
   def applyEdgeDelta(relType: String, toCreate: DataFrame,
       deletePairs: DataFrame, labelA: String, labelB: String,
       alreadyResolved: Boolean = false): Unit = {
-    val resolved = (if (alreadyResolved) toCreate
-      else resolveEndpoints(toCreate, labelA, labelB))
-      .dropDuplicates("a_id", "b_id")
-    val kept = readEdges(relType)
-      .join(deletePairs.select("a_id", "b_id"), Seq("a_id", "b_id"),
-        "left_anti")
-    table("edges", relType)
-      .commit(kept.unionByName(resolved).dropDuplicates("a_id", "b_id"))
+    val locals = if (alreadyResolved) localRows(toCreate).zip(localRows(deletePairs))
+      else None
+    val image = locals match {
+      case Some((creates, deletes)) =>
+        val created = creates.map(pair).distinct
+        masked(readEdges(relType),
+          notIn(pairKey, (created ++ deletes.map(pair)).map(pairKeyOf)),
+          local(created.map { case (a, b) => Row(a, b) }, Schemas.edge))
+      case None =>
+        val resolved = (if (alreadyResolved) toCreate
+          else resolveEndpoints(toCreate, labelA, labelB))
+          .dropDuplicates("a_id", "b_id")
+        readEdges(relType)
+          .join(deletePairs.select("a_id", "b_id"), Seq("a_id", "b_id"),
+            "left_anti")
+          .unionByName(resolved)
+          .dropDuplicates("a_id", "b_id")
+    }
+    table("edges", relType).commit(image)
   }
 
   /** K2 DETACH semantics for edges: when nodes are deleted, drop edges
     * touching them (the reference gets this from `DETACH DELETE`). */
   def detachEdges(relType: String, deletedA: DataFrame,
       deletedB: DataFrame): Unit = {
-    val kept = readEdges(relType)
-      .join(deletedA.select(col(key).as("a_id")), Seq("a_id"), "left_anti")
-      .join(deletedB.select(col(key).as("b_id")), Seq("b_id"), "left_anti")
+    val kept = (localRows(deletedA), localRows(deletedB)) match {
+      case (Some(a), Some(b)) =>
+        masked(readEdges(relType),
+          notIn(col("a_id"), a.map(_.getAs[Any](key))) &&
+            notIn(col("b_id"), b.map(_.getAs[Any](key))),
+          local(Nil, Schemas.edge))
+      case _ =>
+        readEdges(relType)
+          .join(deletedA.select(col(key).as("a_id")), Seq("a_id"), "left_anti")
+          .join(deletedB.select(col(key).as("b_id")), Seq("b_id"), "left_anti")
+    }
     table("edges", relType).commit(kept)
   }
+
+  /** The rows of `df` when its plan is driver-local — it optimizes to a
+    * `LocalRelation`, so collecting it runs no job. */
+  private def localRows(df: DataFrame): Option[Seq[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect().toSeq)
+      case _ => None
+    }
+
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+}
+
+object GraphSink {
+
+  /** Separator of [[pairKey]]: a control character no id contains. */
+  private[graft] val PairSep = "\u0001"
+
+  /** An edge's (a_id, b_id) as one string: the key a reconciled relation's
+    * state records, and the key a driver-local edge write masks. */
+  private[graft] val pairKey: Column = concat_ws(PairSep, col("a_id"), col("b_id"))
+
+  private def pairKeyOf(p: (String, String)): String = p._1 + PairSep + p._2
+
+  private def pair(r: Row): (String, String) =
+    (r.getAs[String]("a_id"), r.getAs[String]("b_id"))
 }

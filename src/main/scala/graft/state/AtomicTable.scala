@@ -1,7 +1,8 @@
 package graft.state
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession, classic}
+import org.apache.spark.sql.functions.{coalesce, lit, not}
 import org.apache.spark.sql.types.StructType
 
 /** Crash-safe versioned parquet table.
@@ -150,4 +151,29 @@ class AtomicTable(spark: SparkSession, base: String) {
       }
     }
   }
+}
+
+object AtomicTable {
+
+  /** The image of a write whose delta is on the driver: the rows of
+    * `existing` that `keep`, plus `rows`, in as many partitions as
+    * `existing` fills at `spark.sql.files.maxPartitionBytes` each (its
+    * file sizes, so no job). Without the coalesce every write would keep
+    * each old file as a partition of its own and add the local rows'
+    * slices as new files, so a table's file count would grow with every
+    * commit. */
+  def masked(existing: DataFrame, keep: Column, rows: DataFrame): DataFrame = {
+    val split = existing.sparkSession.asInstanceOf[classic.SparkSession]
+      .sessionState.conf.filesMaxPartitionBytes
+    val bytes = existing.queryExecution.optimizedPlan.stats.sizeInBytes
+    existing.filter(keep).unionByName(rows)
+      .coalesce(((bytes + split - 1) / split).max(1).toInt)
+  }
+
+  /** The literal mask of such a write: `c` is not one of `keys`.
+    * A null `c` is outside every mask, as it matches no key of an
+    * anti-join. */
+  def notIn(c: Column, keys: Iterable[Any]): Column =
+    if (keys.isEmpty) lit(true)
+    else not(coalesce(c.isin(keys.toSeq: _*), lit(false)))
 }

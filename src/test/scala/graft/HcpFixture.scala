@@ -25,6 +25,25 @@ object HcpFixture {
       |                 "updated_at": "2024-07-02T01:00:00Z"}]}}
       |]}""".stripMargin.replaceAll("\n", " ")
 
+  /** A churn pass after [[json]]: b1 vanishes (with v1 and bl1), b2 moves
+    * to version v4 with build bl5 (so v2, bl2 and bl3 vanish), and b3
+    * arrives under a new project proj2 of org1 with v3 and bl4. */
+  val churnJson: String =
+    """{"buckets": [
+      |  {"id": "b2", "name": "app-img", "created-at": "2024-02-01T00:00:00Z",
+      |   "updated-at": "2024-08-01T00:00:00Z", "resource_name": "packer/b2",
+      |   "location": {"organization_id": "org1", "project_id": "proj1"},
+      |   "latest_version": {"id": "v4", "name": "v2.4",
+      |     "builds": [{"id": "bl5", "created_at": "2024-08-01T00:00:00Z",
+      |                 "updated_at": "2024-08-01T01:00:00Z"}]}},
+      |  {"id": "b3", "name": "db-img", "created-at": "2024-03-01T00:00:00Z",
+      |   "updated-at": "2024-08-01T00:00:00Z", "resource_name": "packer/b3",
+      |   "location": {"organization_id": "org1", "project_id": "proj2"},
+      |   "latest_version": {"id": "v3", "name": "v3.0",
+      |     "builds": [{"id": "bl4", "created_at": "2024-08-01T00:00:00Z",
+      |                 "updated_at": "2024-08-01T01:00:00Z"}]}}
+      |]}""".stripMargin.replaceAll("\n", " ")
+
   val emptyJson = """{"buckets": []}"""
 
   def doc(spark: SparkSession, body: String = json): DataFrame = {

@@ -13,15 +13,17 @@ import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.HcpTransforms
-import graft.pipeline.{CreateNode, FunctionSpec, HcpIntegration,
-  IntegrationSpec, SyncDriver}
+import graft.pipeline.{CreateNode, CreateRelation, FunctionSpec,
+  HcpIntegration, IntegrationSpec, SyncDriver}
 import graft.sink.GraphSink
 import graft.state.SnapshotStore
 
 /** The pipelined pass of [[SyncDriver]]: a background job carries the
   * caller's local properties as of its submission (so profiler slots and
-  * trace spans charge it to the caller), none outlives a failed pass, and
-  * a spec that would let two functions share state is refused up front. */
+  * trace spans charge it to the caller), none outlives a failed pass, a
+  * spec that would let two functions share state is refused up front,
+  * and each write of a pass is one shuffle-free Spark job whenever its
+  * delta fits on the driver. */
 class SyncPassSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -184,5 +186,149 @@ class SyncPassSpec extends AnyFunSuite {
     assert(seen.get > 0)
     assert(rec.jobs - jobs0 === seen.get)
     assert(profile.unattributedJobs === unattributed0)
+  }
+
+  private val WriteKey = "sync-pass-spec.write"
+
+  /** A sink and store whose every write runs under the local property
+    * [[WriteKey]] = `<kind> <table>#<n>`; `writes` lists them in order. */
+  private final class TaggedWrites(root: String) {
+    private val sc = spark.sparkContext
+    val writes = scala.collection.mutable.ArrayBuffer.empty[String]
+    private def tagged(name: String)(body: => Unit): Unit = {
+      writes += s"$name#${writes.size}"
+      sc.setLocalProperty(WriteKey, writes.last)
+      try body finally sc.setLocalProperty(WriteKey, null)
+    }
+    private val store = new SnapshotStore(spark, s"$root/state") {
+      override def commit(integration: String, function: String,
+          postImage: DataFrame, partitions: Int): Unit =
+        tagged(s"state.commit $function")(
+          super.commit(integration, function, postImage, partitions))
+    }
+    private val sink = new GraphSink(spark, s"$root/graph") {
+      override def applyNodeDelta(label: String, toCreate: DataFrame,
+          toDelete: DataFrame): Unit =
+        tagged(s"sink.node_apply $label")(
+          super.applyNodeDelta(label, toCreate, toDelete))
+      override def detachEdges(relType: String, deletedA: DataFrame,
+          deletedB: DataFrame): Unit =
+        tagged(s"sink.detach $relType")(
+          super.detachEdges(relType, deletedA, deletedB))
+      override def applyEdgeDelta(relType: String, toCreate: DataFrame,
+          deletePairs: DataFrame, labelA: String, labelB: String,
+          alreadyResolved: Boolean): Unit =
+        tagged(s"sink.edge_apply $relType")(super.applyEdgeDelta(relType,
+          toCreate, deletePairs, labelA, labelB, alreadyResolved))
+    }
+    val driver = new SyncDriver(spark, store, sink)
+  }
+
+  /** Runs `body`; returns, per write tag, the stage count of each job
+    * that ran under it. */
+  private def jobsPerWrite(body: => Unit): Map[String, Seq[Int]] = {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentHashMap[Int, (String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(WriteKey)))
+          .foreach(w => jobs.put(e.jobId, (w, e.stageInfos.size)))
+    }
+    sc.addSparkListener(listener)
+    try body finally {
+      GraftSqlBridge.drainListenerBus(sc, 60000L)
+      sc.removeSparkListener(listener)
+    }
+    jobs.asScala.values.toSeq.groupMap(_._1)(_._2)
+  }
+
+  private def hcp(name: String, body: String): IntegrationSpec =
+    HcpIntegration.spec(name, s => HcpFixture.doc(s, body))
+
+  /** Every node, edge and state table of an HCP pass under `root`. */
+  private def tables(root: String, spec: IntegrationSpec): Seq[DataFrame] = {
+    val sink = new GraphSink(spark, s"$root/graph")
+    val store = new SnapshotStore(spark, s"$root/state")
+    Seq("bucket", "org", "project", "version", "packer_build")
+      .map(l => sink.readNodes(l)) ++
+      Seq("has__org__project", "has__project__bucket",
+        "creates__bucket__version", "creates__version__packer_build")
+        .map(sink.readEdges) ++
+      spec.functions.map(fn => store.read(spec.key, fn.name))
+  }
+
+  /** [[tables]] as sorted JSON lines. */
+  private def dump(root: String, spec: IntegrationSpec): Seq[String] =
+    tables(root, spec).map(_.toJSON.collect().sorted.mkString("\n"))
+
+  test("each sink and store write of a churn pass runs exactly one Spark " +
+      "job, with no shuffle stage, and no table gains files pass by pass") {
+    val root = tempRoot()
+    val w = new TaggedWrites(root)
+    w.driver.run(hcp("hcp-onejob", HcpFixture.json))
+    Seq(HcpFixture.churnJson, HcpFixture.json).foreach { body =>
+      val from = w.writes.size
+      val jobs = jobsPerWrite(w.driver.run(hcp("hcp-onejob", body)))
+      val churn = w.writes.drop(from).toSeq
+      Seq("sink.detach", "sink.node_apply", "state.commit", "sink.edge_apply")
+        .foreach(kind => assert(churn.exists(_.startsWith(kind)),
+          s"no $kind among $churn"))
+      churn.foreach(write => assert(jobs.get(write) === Some(Seq(1)),
+        s"$write ran jobs of ${jobs.get(write)} stages"))
+    }
+    tables(root, hcp("hcp-onejob", HcpFixture.json)).foreach(t =>
+      assert(t.inputFiles.length <= 1, t.inputFiles.mkString(", ")))
+  }
+
+  test("with the broadcast threshold off, the same churn passes take the " +
+      "join path and leave graph and state identical") {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    def passes(off: Boolean): (Seq[String], Map[String, Seq[Int]]) = {
+      val root = tempRoot()
+      val w = new TaggedWrites(root)
+      val spec = hcp("hcp-fork", HcpFixture.json)
+      val prev = spark.conf.getOption(threshold)
+      if (off) spark.conf.set(threshold, "-1")
+      val jobs = try jobsPerWrite {
+        w.driver.run(spec)
+        w.driver.run(hcp("hcp-fork", HcpFixture.churnJson))
+      } finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+      (dump(root, spec), jobs)
+    }
+    val (localTables, localJobs) = passes(off = false)
+    val (joinTables, joinJobs) = passes(off = true)
+    assert(localJobs.values.forall(_ == Seq(1)), localJobs)
+    assert(joinJobs.values.exists(_.size > 1), joinJobs)
+    assert(joinTables === localTables)
+  }
+
+  test("two passthrough relations on one edge table share one write per " +
+      "pass and leave no duplicate pair") {
+    def specWith(body: String, twice: Boolean): IntegrationSpec = {
+      val plain = hcp("hcp-shared", body)
+      if (!twice) plain
+      else plain.copy(functions = plain.functions :+ FunctionSpec(
+        "project_bucket_again", CreateRelation("has", "project", "bucket"),
+        HcpTransforms.projectBucketEdges))
+    }
+    val twinRoot = tempRoot()
+    val twin = new SyncDriver(spark, new SnapshotStore(spark, s"$twinRoot/state"),
+      new GraphSink(spark, s"$twinRoot/graph"))
+    val root = tempRoot()
+    val w = new TaggedWrites(root)
+    val edges = new GraphSink(spark, s"$root/graph")
+    Seq(HcpFixture.json, HcpFixture.churnJson).foreach { body =>
+      val from = w.writes.size
+      val r = w.driver.run(specWith(body, twice = true))
+      twin.run(specWith(body, twice = false))
+      assert(w.writes.drop(from)
+        .count(_.startsWith("sink.edge_apply has__project__bucket")) === 1)
+      assert(r("project_bucket_again") === r("project_bucket"))
+      val pairs = edges.readEdges("has__project__bucket").collect()
+        .map(p => (p.getString(0), p.getString(1))).toSeq
+      assert(pairs.size === pairs.distinct.size, pairs)
+      assert(dump(root, specWith(body, twice = false)) ===
+        dump(twinRoot, specWith(body, twice = false)))
+    }
   }
 }
