@@ -15,6 +15,7 @@ import graft.model.Schemas
 import graft.operators.Reconcile
 import graft.sink.GraphSink
 import graft.state.{AtomicTable, SnapshotStore}
+import graft.state.AtomicTable.local
 
 /** The per-integration sync pipeline — the engine's analog of the
   * reference's `execute()` (reference `main.go:121-241`, SURVEY §3.2):
@@ -30,8 +31,8 @@ import graft.state.{AtomicTable, SnapshotStore}
   *    recompute the diff against already-advanced state — the explicit
   *    materialization boundary SURVEY §7.5 calls out — and both delta
   *    counts and both delta sides come from that one join;
-  *  - a delta whose pinned rows fit within Spark's broadcast threshold
-  *    (`spark.sql.autoBroadcastJoinThreshold`, measured on the pinned
+  *  - a delta whose pinned rows are small (within a measured 1 MB and
+  *    within `spark.sql.autoBroadcastJoinThreshold`, sized on the pinned
   *    cache, so it costs no job) is collected to the driver once, with one
   *    winner per key (the smallest hash); the sink, DETACH and state
   *    commit then get driver-local frames, and each writes in one
@@ -164,14 +165,15 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
 
     val relResults = reconciledEdges(spec, reconciledRels, pass)
     val present = matched.map(pass.await).getOrElse(Set.empty)
-    val noPairs = local(Nil, Schemas.edge)
+    val noPairs = local(spark, Nil, Schemas.edge)
     cands.foreach {
       case (a, Some(pairs)) =>
         val resolved = pairs.filter { case (x, y) =>
           present((a.labelA, x)) && present((a.labelB, y)) }
         if (resolved.nonEmpty)
-          sink.applyEdgeDelta(a.table, local(resolved.map { case (x, y) => Row(x, y) },
-            Schemas.edge), noPairs, a.labelA, a.labelB, alreadyResolved = true)
+          sink.applyEdgeDelta(a.table,
+            local(spark, resolved.map { case (x, y) => Row(x, y) }, Schemas.edge),
+            noPairs, a.labelA, a.labelB, alreadyResolved = true)
       case (a, None) =>
         sink.applyEdgeDelta(a.table, sink.resolveEndpoints(a.fresh, a.labelA,
           a.labelB), noPairs, a.labelA, a.labelB, alreadyResolved = true)
@@ -197,28 +199,26 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
     val byLabel = deleted.groupMap(_._1)(_._2)
     def keysOf(label: String): DataFrame =
       byLabel.get(label).map(_.reduce(_ unionByName _))
-        .getOrElse(local(Nil, Schemas.deleteRecord))
+        .getOrElse(local(spark, Nil, Schemas.deleteRecord))
     rels.distinctBy(edgeTable).foreach { r =>
       if (byLabel.contains(r.labelA) || byLabel.contains(r.labelB))
         sink.detachEdges(edgeTable(r), keysOf(r.labelA), keysOf(r.labelB))
     }
   }
 
-  /** Whether a pinned frame, its cache built, fits within Spark's
-    * broadcast threshold: the size Spark itself would ship to every
-    * executor. The cache's measured size needs no job. */
+  /** Whether a pinned frame, its cache built, is small enough for the
+    * driver-local plan: within [[LocalDeltaBytes]] and within Spark's
+    * broadcast threshold, so a threshold of -1 turns the local plan off.
+    * The cache's measured size needs no job. */
   private def fitsOnDriver(pinned: DataFrame): Boolean = {
     val limit = pinned.sparkSession.asInstanceOf[classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
+      .sessionState.conf.autoBroadcastJoinThreshold.min(LocalDeltaBytes)
     limit >= 0 && pinned.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
   }
 
-  private def local(rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
-
   /** A passthrough table's pinned candidates on the driver, distinct and
-    * without null ids, when they fit within the broadcast threshold;
-    * None when they stay distributed. */
+    * without null ids, when they fit on the driver; None when they stay
+    * distributed. */
   private def candidates(fresh: DataFrame): Option[Seq[(String, String)]] =
     if (fresh.count() == 0) Some(Nil)
     else if (!fitsOnDriver(fresh)) None
@@ -291,8 +291,8 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
   /** RECONCILE, step 1 of one reconciled function (a node function, or a
     * relation with `reconcile = true`): pins the changed rows of `keyed`
     * against the committed state and submits the job that counts them —
-    * which also builds the pinned cache — and, when they fit within the
-    * broadcast threshold, collects them to the driver. */
+    * which also builds the pinned cache — and, when they fit on the
+    * driver, collects them there. */
   private def diff(spec: IntegrationSpec, fn: FunctionSpec, keyed: DataFrame,
       pass: Pass): CompletableFuture[Changed] = {
     val state = store.read(spec.key, fn.name)
@@ -324,11 +324,11 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
     val deleted = deletes.map(_.getString(1))
     val postImage = AtomicTable.masked(state,
       AtomicTable.notIn(col(key), winners.map(_.getString(1)) ++ deleted),
-      local(winners.map(r => Row(r.getString(1), r.getLong(2))), Schemas.state))
+      local(spark, winners.map(r => Row(r.getString(1), r.getLong(2))), Schemas.state))
     Changed(keyed, nc, nd, Reconcile.Delta(
-      local(winners.map(r => Row.fromSeq(r.toSeq.drop(3))),
+      local(spark, winners.map(r => Row.fromSeq(r.toSeq.drop(3))),
         StructType(picked.schema.drop(3))),
-      local(deleted.map(Row(_)), Schemas.deleteRecord)), postImage)
+      local(spark, deleted.map(Row(_)), Schemas.deleteRecord)), postImage)
   }
 
   /** LOAD → COMMIT STATE → VERIFY of one reconciled function: when the
@@ -416,6 +416,16 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
 }
 
 object SyncDriver {
+
+  /** The pinned-delta size up to which a pass takes the driver-local
+    * plan. That plan wins by the jobs it saves, which is most of what a
+    * small table's write costs (on `sync_steady` every delta, full load
+    * included, is at most 0.53 MB). On a 4-core host, writing one changed
+    * node function of a 400k-row table (sink and state, median of 3), the
+    * two plans tied up to 0.8 MB of delta (5k keys: 2.75 vs 2.66 s) and
+    * the join plan won from 1.6 MB on, 2.1x at 9.8 MB, just under Spark's
+    * 10 MB broadcast threshold (SCALING.md). */
+  private val LocalDeltaBytes = 1L << 20
 
   /** A reconciled function's delta after step 1: its keyed batch, its
     * counts, the two sides the sink applies and the post-image the store

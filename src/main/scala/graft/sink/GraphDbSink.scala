@@ -106,9 +106,13 @@ class GraphDbWriter(txFactory: GraphTxFactory, batchSize: Int = 1000)
   *    remote DETACH already did);
   *  - edge creates forward the RESOLVED pair set; the remote `MATCH`
   *    re-drops anything dangling (there should be none — same input).
-  *    [[graft.pipeline.SyncDriver]] hands a passthrough table only the
-  *    pairs it lacks, so a pass forwards only new pairs; MERGE makes a
-  *    re-sent pair harmless either way.
+  *  - edge writes go to the remote BEFORE the local table. A passthrough
+  *    relation has no state to re-diff: [[graft.pipeline.SyncDriver]]
+  *    hands its table only the pairs the table lacks, so a pair that
+  *    reached the local table is never sent again. Remote first keeps
+  *    every local pair on the remote too: a write that fails leaves the
+  *    local table without the pair, and the next pass (or the streaming
+  *    replay) sends it again, which MERGE makes harmless.
   */
 class MirroredGraphSink(spark: SparkSession, root: String,
     writer: GraphDbWriter)
@@ -143,17 +147,15 @@ class MirroredGraphSink(spark: SparkSession, root: String,
 
   override def mergeEdges(relType: String, edges: DataFrame, labelA: String,
       labelB: String): Unit = {
-    super.mergeEdges(relType, edges, labelA, labelB)
     writer.write(
       resolveEndpoints(edges, labelA, labelB).dropDuplicates("a_id", "b_id"),
       CypherDialect.mergeEdges(relOf(relType, labelA, labelB), labelA, labelB))
+    super.mergeEdges(relType, edges, labelA, labelB)
   }
 
   override def applyEdgeDelta(relType: String, toCreate: DataFrame,
       deletePairs: DataFrame, labelA: String, labelB: String,
       alreadyResolved: Boolean = false): Unit = {
-    super.applyEdgeDelta(relType, toCreate, deletePairs, labelA, labelB,
-      alreadyResolved)
     val rel = relOf(relType, labelA, labelB)
     val resolved = (if (alreadyResolved) toCreate
       else resolveEndpoints(toCreate, labelA, labelB))
@@ -165,5 +167,7 @@ class MirroredGraphSink(spark: SparkSession, root: String,
       CypherDialect.deleteEdges(rel, labelA, labelB))
     writer.write(resolved.select(col("a_id"), col("b_id")),
       CypherDialect.mergeEdges(rel, labelA, labelB))
+    super.applyEdgeDelta(relType, toCreate, deletePairs, labelA, labelB,
+      alreadyResolved)
   }
 }

@@ -1,15 +1,12 @@
 package graft.sink
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 import graft.state.AtomicTable
-import graft.state.AtomicTable.{masked, notIn}
+import graft.state.AtomicTable.{local, masked, notIn}
 
 /** Property-graph sink with the reference's Cypher semantics (reference
   * `internal/store/neo4j.go`), materialized as one parquet [[graft.state
@@ -30,11 +27,11 @@ import graft.state.AtomicTable.{masked, notIn}
   *
   * Two plans per write, chosen by the arguments alone:
   * - *Driver-local delta* (every argument's plan is a `LocalRelation`, as
-  *   [[graft.pipeline.SyncDriver]] passes a delta within Spark's broadcast
-  *   threshold): the image is the table minus the delta's keys as a
-  *   literal `NOT IN` mask, plus the delta rows — one scan-and-write job,
-  *   no shuffle. Like Delta Lake's touched-key pruning of `MERGE`
-  *   (Armbrust et al., VLDB 2020), only the delta decides what changes.
+  *   [[graft.pipeline.SyncDriver]] passes a small delta): the image is the
+  *   table minus the delta's keys as a literal `NOT IN` mask, plus the
+  *   delta rows — one scan-and-write job, no shuffle. Like Delta Lake's
+  *   touched-key pruning of `MERGE` (Armbrust et al., VLDB 2020), only
+  *   the delta decides what changes.
   * - *Distributed delta* (any other argument): anti-joins against the
   *   delta and a `dropDuplicates` on the key, several jobs.
   *
@@ -76,7 +73,7 @@ class GraphSink(spark: SparkSession, root: String) {
         val winners = creates.map(r => r.getAs[Any](key) -> r).toMap
         masked(existing, notIn(col(key),
           winners.keys ++ deletes.map(_.getAs[Any](key))),
-          local(winners.values.toSeq, toCreate.schema))
+          local(spark, winners.values.toSeq, toCreate.schema))
       case _ =>
         existing
           .join(toDelete.select(col(key)), Seq(key), "left_anti")
@@ -132,7 +129,7 @@ class GraphSink(spark: SparkSession, root: String) {
         val created = creates.map(pair).distinct
         masked(readEdges(relType),
           notIn(pairKey, (created ++ deletes.map(pair)).map(pairKeyOf)),
-          local(created.map { case (a, b) => Row(a, b) }, Schemas.edge))
+          local(spark, created.map { case (a, b) => Row(a, b) }, Schemas.edge))
       case None =>
         val resolved = (if (alreadyResolved) toCreate
           else resolveEndpoints(toCreate, labelA, labelB))
@@ -155,7 +152,7 @@ class GraphSink(spark: SparkSession, root: String) {
         masked(readEdges(relType),
           notIn(col("a_id"), a.map(_.getAs[Any](key))) &&
             notIn(col("b_id"), b.map(_.getAs[Any](key))),
-          local(Nil, Schemas.edge))
+          local(spark, Nil, Schemas.edge))
       case _ =>
         readEdges(relType)
           .join(deletedA.select(col(key).as("a_id")), Seq("a_id"), "left_anti")
@@ -171,9 +168,6 @@ class GraphSink(spark: SparkSession, root: String) {
       case _: LocalRelation => Some(df.collect().toSeq)
       case _ => None
     }
-
-  private def local(rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
 }
 
 object GraphSink {

@@ -1,7 +1,11 @@
 package graft.state
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession, classic}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions.{coalesce, lit, not}
 import org.apache.spark.sql.types.StructType
 
@@ -156,24 +160,33 @@ class AtomicTable(spark: SparkSession, base: String) {
 object AtomicTable {
 
   /** The image of a write whose delta is on the driver: the rows of
-    * `existing` that `keep`, plus `rows`, in as many partitions as
-    * `existing` fills at `spark.sql.files.maxPartitionBytes` each (its
-    * file sizes, so no job). Without the coalesce every write would keep
-    * each old file as a partition of its own and add the local rows'
-    * slices as new files, so a table's file count would grow with every
-    * commit. */
-  def masked(existing: DataFrame, keep: Column, rows: DataFrame): DataFrame = {
-    val split = existing.sparkSession.asInstanceOf[classic.SparkSession]
-      .sessionState.conf.filesMaxPartitionBytes
-    val bytes = existing.queryExecution.optimizedPlan.stats.sizeInBytes
+    * `existing` that `keep`, plus `rows`, in as many partitions as a scan
+    * of `existing` splits into (planned, so no job). Without the coalesce
+    * every write would add the local rows' slices as new files, so a
+    * table's file count would grow with every commit; with fewer
+    * partitions than the scan, a large table would be rewritten by fewer
+    * tasks than the join plan uses. */
+  def masked(existing: DataFrame, keep: Column, rows: DataFrame): DataFrame =
     existing.filter(keep).unionByName(rows)
-      .coalesce(((bytes + split - 1) / split).max(1).toInt)
-  }
+      .coalesce(existing.rdd.getNumPartitions.max(1))
+
+  /** `rows` as a driver-local frame (its plan is a `LocalRelation`): the
+    * form of a delta that takes [[masked]]. */
+  def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** The literal mask of such a write: `c` is not one of `keys`.
     * A null `c` is outside every mask, as it matches no key of an
     * anti-join. */
   def notIn(c: Column, keys: Iterable[Any]): Column =
     if (keys.isEmpty) lit(true)
-    else not(coalesce(c.isin(keys.toSeq: _*), lit(false)))
+    else not(coalesce(inSet(c, keys), lit(false)))
+
+  /** `c.isin(keys: _*)` built as the one `InSet` expression the optimizer
+    * would turn it into: an `In` of one literal per key costs every
+    * analyzer and optimizer rule a walk over all of them, seconds per
+    * write at 50k keys. */
+  private def inSet(c: Column, keys: Iterable[Any]): Column =
+    GraftSqlBridge.column(InSet(GraftSqlBridge.expression(c),
+      keys.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet))
 }

@@ -24,9 +24,9 @@ import graft.model.Schemas
   *
   * The post-image is the caller's. [[graft.pipeline.SyncDriver]] passes
   * the prior image minus the changed keys as a literal mask, plus the
-  * changed (key, hash) rows, when the delta fits within Spark's broadcast
-  * threshold: one shuffle-free job. Above it, the driver passes the
-  * batch's (key, hash) projection, one winner per key.
+  * changed (key, hash) rows, when the delta is small enough to collect:
+  * one shuffle-free job. Otherwise the driver passes the batch's (key,
+  * hash) projection, one winner per key.
   *
   * Scale: the state image is written with whatever partitioning its
   * post-image plan has (no caller passes [[commit]]'s `partitions`); the

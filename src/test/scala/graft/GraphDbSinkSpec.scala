@@ -80,6 +80,31 @@ class FakeTxFactory(name: String) extends GraphTxFactory {
   }
 }
 
+/** [[FakeTxFactory]] that throws at the commit of the first transaction
+  * carrying the `failing` statement while its name is armed in
+  * [[FailOnceTx.armed]], and disarms it: a remote write that fails once. */
+class FailOnceTxFactory(name: String, failing: String) extends GraphTxFactory {
+  private val fake = new FakeTxFactory(name)
+  override def begin(): GraphTx = new GraphTx {
+    private val tx = fake.begin()
+    private var carries = false
+    override def run(cypher: String, list: Seq[Map[String, Any]]): Unit = {
+      carries ||= cypher == failing
+      tx.run(cypher, list)
+    }
+    override def commit(): Unit =
+      if (carries && FailOnceTx.armed.remove(name))
+        throw new RuntimeException(s"injected remote failure: $failing")
+      else tx.commit()
+    override def rollback(): Unit = tx.rollback()
+  }
+}
+
+object FailOnceTx {
+  val armed: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+}
+
 class GraphDbSinkSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -200,5 +225,24 @@ class GraphDbSinkSpec extends AnyFunSuite {
     val remaining = db.synchronized(
       db.edges.collect { case ("has", "bucket", a, "version", b) => (a, b) }.toSet)
     assert(remaining === Set(("b1", "v1")))
+  }
+
+  test("a remote edge write that fails after the nodes landed is sent " +
+      "again by the next pass, and the mirror converges") {
+    val name = "fail-once"
+    FakeGraphDb.drop(name)
+    val root = java.nio.file.Files.createTempDirectory("graft-gdb").toString
+    val sink = new MirroredGraphSink(spark, s"$root/graph", new GraphDbWriter(
+      new FailOnceTxFactory(name, CypherDialect.mergeEdges("has", "project", "bucket"))))
+    val driver = new SyncDriver(spark, new SnapshotStore(spark, s"$root/state"), sink)
+    val db = FakeGraphDb(name)
+    val spec = HcpIntegration.spec("gdb-fail", s => HcpFixture.doc(s))
+    FailOnceTx.armed.add(name)
+    val boom = intercept[Exception](driver.run(spec))
+    assert(!FailOnceTx.armed.contains(name), boom)
+    // the retry on the same document finds the pairs still to send
+    driver.run(spec)
+    assertConverged(sink, db)
+    assert(db.synchronized(db.edges.count(_._1 == "has")) === 3)
   }
 }

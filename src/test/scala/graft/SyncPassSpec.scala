@@ -331,4 +331,35 @@ class SyncPassSpec extends AnyFunSuite {
         dump(twinRoot, specWith(body, twice = false)))
     }
   }
+
+  test("a passthrough and a reconciled relation on one edge table: a pair " +
+      "the passthrough batch carries stays, whatever the reconciled one " +
+      "deletes, in either declaration order") {
+    // the reconciled relation drops (proj1, b2) on the second pass; the
+    // passthrough relation still carries it
+    def spec(dropB2: Boolean, thruFirst: Boolean): IntegrationSpec = {
+      val plain = hcp("hcp-mixed", HcpFixture.json)
+      val reconciled = FunctionSpec("project_bucket_reconciled",
+        CreateRelation("has", "project", "bucket", reconcile = true), doc => {
+          val pairs = HcpTransforms.projectBucketEdges(doc)
+          if (dropB2) pairs.filter(col("b_id") =!= "b2") else pairs
+        })
+      val (nodes, rels) = plain.functions.partition(_.kind.isInstanceOf[CreateNode])
+      val thru = rels.filter(_.name == "project_bucket")
+      plain.copy(functions = nodes ++
+        (if (thruFirst) thru :+ reconciled else reconciled +: thru))
+    }
+    for (thruFirst <- Seq(true, false)) {
+      val root = tempRoot()
+      val driver = new SyncDriver(spark, new SnapshotStore(spark, s"$root/state"),
+        new GraphSink(spark, s"$root/graph"))
+      driver.run(spec(dropB2 = false, thruFirst))
+      val r = driver.run(spec(dropB2 = true, thruFirst))
+      assert(r("project_bucket_reconciled") === ((0L, 1L)), s"thruFirst=$thruFirst")
+      val pairs = new GraphSink(spark, s"$root/graph").readEdges("has__project__bucket")
+        .collect().map(p => (p.getString(0), p.getString(1))).toSeq
+      assert(pairs.sorted === Seq(("proj1", "b1"), ("proj1", "b2")),
+        s"thruFirst=$thruFirst")
+    }
+  }
 }
