@@ -112,7 +112,11 @@ object Reconcile {
     * simply the batch's key→hash projection: commit upserts every created
     * key, drops every deleted key, and keeps unchanged keys — which together
     * is exactly the incoming batch image (reference `recon.go:102-131`).
-    * No join needed: one column projection, shuffle-free.
+    * No join needed: one column projection, shuffle-free. The
+    * `reconcile_commit` query and specs are its only users: a sync commits
+    * the prior state minus its changed keys plus their (key, hash) rows
+    * ([[graft.state.AtomicTable.replaceKeyed]]), after collapsing the
+    * batch to one row per key ([[graft.pipeline.SyncDriver]]).
     *
     * Duplicate keys in a batch: the reference emits every duplicate to
     * toCreate and lets MERGE last-wins resolve (batch iteration order,

@@ -8,11 +8,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, element_at, lit, split}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.Schemas
-import graft.operators.Reconcile
+import graft.operators.{Reconcile, Transforms}
 import graft.sink.GraphSink
 import graft.state.{AtomicTable, SnapshotStore}
 import graft.state.AtomicTable.local
@@ -31,13 +30,19 @@ import graft.state.AtomicTable.local
   *    recompute the diff against already-advanced state — the explicit
   *    materialization boundary SURVEY §7.5 calls out — and both delta
   *    counts and both delta sides come from that one join;
-  *  - a delta whose pinned rows are small (within a measured 1 MB and
-  *    within `spark.sql.autoBroadcastJoinThreshold`, sized on the pinned
-  *    cache, so it costs no job) is collected to the driver once, with one
-  *    winner per key (the smallest hash); the sink, DETACH and state
-  *    commit then get driver-local frames, and each writes in one
-  *    shuffle-free job (the table minus the delta's keys, plus its rows;
-  *    see [[GraphSink]]). A larger delta keeps the distributed joins;
+  *  - a reconciled function's batch is collapsed to one row per key
+  *    before the diff, the row with the smallest change hash, so the diff,
+  *    the sink, the state and VERIFY see the same row (the reference's
+  *    winner is the last in batch order, `recon.go:72-131`; a distributed
+  *    bag has no order);
+  *  - every sink and state write is one [[AtomicTable.replaceKeyed]]: the
+  *    table minus the delta's keys, plus its rows. A delta whose pinned
+  *    rows are small (within a measured 1 MB and within
+  *    `spark.sql.autoBroadcastJoinThreshold`, sized on the pinned cache,
+  *    so it costs no job) is collected to the driver once; the sink,
+  *    DETACH and state commit then get driver-local frames, and each
+  *    writes in one shuffle-free job. A larger delta stays distributed,
+  *    and each write shuffles once on its key;
   *  - the pass is pipelined. Every transform, [[SnapshotStore]] and
   *    [[GraphSink]] call runs on the calling thread, so writes land in one
   *    fixed order. The Spark actions that only read — delta counts and
@@ -240,7 +245,7 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
       val found = wanted.map { case (label, ids) =>
         sink.readNodes(label, Schemas.state)
           .select(lit(label).as("label"), col(key))
-          .filter(col(key).isin(ids.distinct: _*))
+          .filter(AtomicTable.inSet(col(key), ids))
       }.reduce(_ unionByName _)
       Some(pass.submit(found.collect().map(r => (r.getString(0), r.getString(1))).toSet))
     }
@@ -262,9 +267,9 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
       // out of state entirely, so it re-enters the diff as toCreate on
       // every sync until both endpoints exist — and an edge removed by
       // detachEdges reconverges the same way when its node returns.
-      // keyed is pinned: it feeds the diff, the post-commit state image,
-      // and the convergence check — without the persist each would re-run
-      // the two node-table endpoint joins.
+      // keyed is pinned: it feeds the diff and the convergence check —
+      // without the persist each would re-run the two node-table endpoint
+      // joins.
       val keyed = pass.pin(sink.resolveEndpoints(batch, r.labelA, r.labelB)
         .withColumn(key, GraphSink.pairKey))
       (fn, i, r, diff(spec, fn, keyed, pass))
@@ -289,46 +294,37 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
   }
 
   /** RECONCILE, step 1 of one reconciled function (a node function, or a
-    * relation with `reconcile = true`): pins the changed rows of `keyed`
+    * relation with `reconcile = true`): collapses `batch` to one row per
+    * key, the row with the smallest change hash, so the diff, the sink,
+    * the state and VERIFY all see the same row; pins the changed rows
     * against the committed state and submits the job that counts them —
     * which also builds the pinned cache — and, when they fit on the
-    * driver, collects them there. */
-  private def diff(spec: IntegrationSpec, fn: FunctionSpec, keyed: DataFrame,
+    * driver, collects them there in one job. The sink delta and the state
+    * post-image (the prior state minus the changed keys, plus the changed
+    * (key, hash) rows) are frames over those rows, driver-local when
+    * collected. */
+  private def diff(spec: IntegrationSpec, fn: FunctionSpec, batch: DataFrame,
       pass: Pass): CompletableFuture[Changed] = {
+    val keyed = Transforms.lastWinsByKey(Reconcile.withHash(batch), key,
+      col("__hash")).drop("__hash")
     val state = store.read(spec.key, fn.name)
     val changes = pass.pin(Reconcile.changes(keyed, state))
     val columns = keyed.columns.toSeq
+    // (__op, __key, __hash, batch columns…)
+    val picked = changes.select(col("op").as("__op") +: col("__key") +:
+      col("b.__hash") +: columns.map(c => col(s"b.`$c`")): _*)
     pass.submit {
       val (nc, nd) = Reconcile.deltaCounts(changes)
-      if ((nc > 0 || nd > 0) && fitsOnDriver(changes))
-        localDelta(keyed, nc, nd, changes, state)
-      else Changed(keyed, nc, nd, Reconcile.delta(changes, columns),
-        Reconcile.postState(keyed))
+      val rows = if ((nc > 0 || nd > 0) && fitsOnDriver(changes))
+        local(spark, picked.collect().toSeq, picked.schema) else picked
+      val creates = rows.filter(col("__op") === Reconcile.OpCreate)
+      val deletes = rows.filter(col("__op") === Reconcile.OpDelete)
+        .select(col("__key").as(key))
+      Changed(keyed, nc, nd,
+        Reconcile.Delta(creates.select(columns.map(c => col(s"`$c`")): _*), deletes),
+        AtomicTable.replaceKeyed(state, col(key),
+          creates.select(col("__key").as(key), col("__hash").as("hash")), deletes))
     }
-  }
-
-  /** The delta of pinned `changes` collected to the driver in one job, as
-    * driver-local frames. Each created key keeps one row, the one with
-    * the smallest hash, so the row the sink stores is the row whose hash
-    * the state records. The post-image is the prior state minus every
-    * changed key, plus the changed (key, hash) rows. */
-  private def localDelta(keyed: DataFrame, nc: Long, nd: Long,
-      changes: DataFrame, state: DataFrame): Changed = {
-    // (op, key, hash, batch columns…)
-    val picked = changes.select(col("op") +: col("__key") +: col("b.__hash") +:
-      keyed.columns.toSeq.map(c => col(s"b.`$c`")): _*)
-    val (creates, deletes) = picked.collect().toSeq
-      .partition(_.getString(0) == Reconcile.OpCreate)
-    val winners = creates.groupBy(_.getString(1)).values
-      .map(_.minBy(_.getLong(2))).toSeq
-    val deleted = deletes.map(_.getString(1))
-    val postImage = AtomicTable.masked(state,
-      AtomicTable.notIn(col(key), winners.map(_.getString(1)) ++ deleted),
-      local(spark, winners.map(r => Row(r.getString(1), r.getLong(2))), Schemas.state))
-    Changed(keyed, nc, nd, Reconcile.Delta(
-      local(spark, winners.map(r => Row.fromSeq(r.toSeq.drop(3))),
-        StructType(picked.schema.drop(3))),
-      local(spark, deleted.map(Row(_)), Schemas.deleteRecord)), postImage)
   }
 
   /** LOAD → COMMIT STATE → VERIFY of one reconciled function: when the

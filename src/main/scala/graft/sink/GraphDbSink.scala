@@ -131,8 +131,8 @@ class MirroredGraphSink(spark: SparkSession, root: String,
     writer.runDdl(labels.map(CypherDialect.keyIndex))
 
   /** Deletes forward BEFORE merges: the local table applies a key present
-    * in both sets as net-create (survivors drop it, the create union
-    * re-adds it), so the remote must end created too — forwarding the
+    * in both sets as net-create (the keyed replace drops it and adds its
+    * row back), so the remote must end created too — forwarding the
     * merge first would let the trailing DETACH DELETE win and diverge the
     * two stores. Reconcile.diff never emits an overlapping key, but the
     * sink must not depend on every caller being a reconcile. */
@@ -161,8 +161,8 @@ class MirroredGraphSink(spark: SparkSession, root: String,
       else resolveEndpoints(toCreate, labelA, labelB))
       .dropDuplicates("a_id", "b_id")
     // deletes before merges — same net-create contract as applyNodeDelta:
-    // locally a pair in both sets survives (anti-join drops it, the create
-    // union re-adds it), so the remote merge must be the last word.
+    // locally a pair in both sets survives (the keyed replace drops it and
+    // adds it back), so the remote merge must be the last word.
     writer.write(deletePairs.select(col("a_id"), col("b_id")),
       CypherDialect.deleteEdges(rel, labelA, labelB))
     writer.write(resolved.select(col("a_id"), col("b_id")),

@@ -6,7 +6,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.InSet
-import org.apache.spark.sql.functions.{coalesce, lit, not}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{coalesce, col, lit, max, not, row_number}
 import org.apache.spark.sql.types.StructType
 
 /** Crash-safe versioned parquet table.
@@ -159,6 +161,60 @@ class AtomicTable(spark: SparkSession, base: String) {
 
 object AtomicTable {
 
+  /** The one write rule of a sync, the reference's `MERGE … SET x = item`
+    * and `DETACH DELETE` by key (`neo4j.go:86-91`, `:116-118`): `existing`
+    * minus its rows whose `key` is a key of `drop` or of `rows`, plus
+    * `rows`, one per key. `key` is evaluated on all three frames; a key in
+    * both `rows` and `drop` ends up as its row. Every node, edge and state
+    * write of [[graft.sink.GraphSink]] and [[graft.pipeline.SyncDriver]]
+    * is this function.
+    *
+    * - When `rows` and `drop` are driver-local (each plan is a
+    *   `LocalRelation`, so collecting them runs no job), their keys are one
+    *   literal mask and the image is one shuffle-free scan of `existing`
+    *   ([[masked]]). A key `rows` holds twice keeps its last row in list
+    *   order, the reference's batch order.
+    * - Otherwise one window on the key picks each key's rows
+    *   ([[distributedReplace]]); a distributed bag has no "last", so a
+    *   key `rows` holds twice keeps an arbitrary one of its rows. */
+  def replaceKeyed(existing: DataFrame, key: Column, rows: DataFrame,
+      drop: DataFrame): DataFrame =
+    (onDriver(rows.withColumn("__key", key)), onDriver(drop.select(key))) match {
+      case (Some(Seq()), Some(Seq())) => existing
+      case (Some(keyed), Some(dropped)) =>
+        val winners = keyed.map(r => r.get(r.length - 1) -> Row.fromSeq(r.toSeq.init)).toMap
+        masked(existing, notIn(key, winners.keys ++ dropped.map(_.get(0))),
+          local(existing.sparkSession, winners.values.toSeq, rows.schema))
+      case _ => distributedReplace(existing, key, rows, drop)
+    }
+
+  /** [[replaceKeyed]] of a delta that is not on the driver, in one
+    * shuffle on the key whatever the number of frames: the rows of all
+    * three, ranked `rows` over `drop` over `existing`; per key, either
+    * every `existing` row (nothing else holds the key) or the first
+    * `rows` row. Anti-joins against `rows` and `drop` would shuffle each
+    * side apart, two to four more jobs per write when nothing broadcasts. */
+  private def distributedReplace(existing: DataFrame, key: Column,
+      rows: DataFrame, drop: DataFrame): DataFrame = {
+    val w = Window.partitionBy("__key").orderBy(col("__rank").desc)
+    existing.withColumn("__rank", lit(0))
+      .unionByName(drop.withColumn("__rank", lit(1)), allowMissingColumns = true)
+      .unionByName(rows.withColumn("__rank", lit(2)), allowMissingColumns = true)
+      .withColumn("__key", key)
+      .withColumn("__top", max("__rank").over(w))
+      .withColumn("__n", row_number().over(w))
+      .filter(col("__top") === 0 || col("__rank") === 2 && col("__n") === 1)
+      .select(existing.columns.toSeq.map(c => col(s"`$c`")): _*)
+  }
+
+  /** The rows of `df` when its plan is driver-local — it optimizes to a
+    * `LocalRelation`, so collecting it runs no job. */
+  private def onDriver(df: DataFrame): Option[Seq[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect().toSeq)
+      case _ => None
+    }
+
   /** The image of a write whose delta is on the driver: the rows of
     * `existing` that `keep`, plus `rows`, in as many partitions as a scan
     * of `existing` splits into (planned, so no job). Without the coalesce
@@ -166,19 +222,17 @@ object AtomicTable {
     * table's file count would grow with every commit; with fewer
     * partitions than the scan, a large table would be rewritten by fewer
     * tasks than the join plan uses. */
-  def masked(existing: DataFrame, keep: Column, rows: DataFrame): DataFrame =
+  private def masked(existing: DataFrame, keep: Column, rows: DataFrame): DataFrame =
     existing.filter(keep).unionByName(rows)
       .coalesce(existing.rdd.getNumPartitions.max(1))
 
-  /** `rows` as a driver-local frame (its plan is a `LocalRelation`): the
-    * form of a delta that takes [[masked]]. */
+  /** `rows` as a driver-local frame (its plan is a `LocalRelation`). */
   def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
   /** The literal mask of such a write: `c` is not one of `keys`.
-    * A null `c` is outside every mask, as it matches no key of an
-    * anti-join. */
-  def notIn(c: Column, keys: Iterable[Any]): Column =
+    * A null `c` is outside every mask. */
+  private def notIn(c: Column, keys: Iterable[Any]): Column =
     if (keys.isEmpty) lit(true)
     else not(coalesce(inSet(c, keys), lit(false)))
 
@@ -186,7 +240,7 @@ object AtomicTable {
     * would turn it into: an `In` of one literal per key costs every
     * analyzer and optimizer rule a walk over all of them, seconds per
     * write at 50k keys. */
-  private def inSet(c: Column, keys: Iterable[Any]): Column =
+  def inSet(c: Column, keys: Iterable[Any]): Column =
     GraftSqlBridge.column(InSet(GraftSqlBridge.expression(c),
       keys.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet))
 }

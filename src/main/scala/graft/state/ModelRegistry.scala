@@ -306,8 +306,20 @@ class ModelRegistry(spark: SparkSession, root: String,
   }
 
   /** A pinned model version: `table(name)` reads from the immutable
-    * `v-<version>` dir. */
+    * `v-<version>` dir. Pins are equal when they name one version of one
+    * model under one registry root. */
   final case class Pinned(model: String, version: Long) {
+    /** The root of the registry this version lives under. */
+    val registryRoot: String = root
+
+    override def equals(other: Any): Boolean = other match {
+      case p: ModelRegistry#Pinned =>
+        (p.registryRoot, p.model, p.version) == ((registryRoot, model, version))
+      case _ => false
+    }
+
+    override def hashCode: Int = (registryRoot, model, version).##
+
     def table(name: String): DataFrame = {
       val dir = s"${versionDir(model, version)}/$name"
       require(fs.exists(new Path(dir)),

@@ -23,10 +23,10 @@ import graft.model.Schemas
   * at-least-once story.
   *
   * The post-image is the caller's. [[graft.pipeline.SyncDriver]] passes
-  * the prior image minus the changed keys as a literal mask, plus the
-  * changed (key, hash) rows, when the delta is small enough to collect:
-  * one shuffle-free job. Otherwise the driver passes the batch's (key,
-  * hash) projection, one winner per key.
+  * the prior image minus the changed keys, plus the changed (key, hash)
+  * rows, as one [[AtomicTable.replaceKeyed]], the rule of every sink write
+  * too: one shuffle-free job when the delta is small enough to collect,
+  * else one shuffle on the key.
   *
   * Scale: the state image is written with whatever partitioning its
   * post-image plan has (no caller passes [[commit]]'s `partitions`); the

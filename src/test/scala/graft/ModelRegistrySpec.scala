@@ -396,4 +396,17 @@ class ModelRegistrySpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSeq.sortBy(_._1)
     assert(viaReg === inSession && pin.version === 1L)
   }
+
+  test("pins compare their registry root: one (model, version) pinned " +
+      "under two roots is two pins, and two pins under one root are one") {
+    val (regA, rootA) = freshRegRoot()
+    val (regB, _) = freshRegRoot()
+    Seq(regA, regB).foreach(_.publish("m", Seq("a" -> Seq((1L, "x")).toDF("k", "v"))))
+    val (a, b) = (regA.snapshot("m"), regB.snapshot("m"))
+    assert((a.model, a.version) === ((b.model, b.version)))
+    assert(a !== b)
+    val again = new ModelRegistry(spark, rootA).snapshot("m")
+    assert(a === regA.snapshot("m") && a === again)
+    assert(a.hashCode === again.hashCode)
+  }
 }
