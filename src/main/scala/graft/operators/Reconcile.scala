@@ -34,9 +34,13 @@ object Reconcile {
 
   val key: String = Schemas.externalId
 
-  /** Attach the change-detection hash (F1-F3) to a batch. */
+  /** Attach the change-detection hash (F1-F3) to a batch. A batch that
+    * already carries `__hash` (a sync's pinned, collapsed batch) keeps it:
+    * hashing it again would plan the batch again, and the canonical-JSON
+    * fallback would hash the hash. */
   def withHash(batch: DataFrame): DataFrame =
-    batch.withColumn("__hash", ChangeHash.changeHash(batch))
+    if (batch.columns.contains("__hash")) batch
+    else batch.withColumn("__hash", ChangeHash.changeHash(batch))
 
   /** Full classified diff of `batch` (node records, must contain
     * `external_id`) against `state` (`external_id`, `hash`).
@@ -71,22 +75,33 @@ object Reconcile {
     * needs no diff: every edge is created and nothing is deleted, so a
     * caller passes the batch straight to the merge-only sink.) */
   def diff(batch: DataFrame, state: DataFrame): Delta =
-    delta(changes(batch, state), batch.columns.toSeq)
+    delta(changes(batch, state))
 
-  /** The [[classified]] rows that are not unchanged: the whole delta of
-    * one join, sized by the delta rather than by state, which is what a
-    * sync pins between diff and write. */
-  def changes(batch: DataFrame, state: DataFrame): DataFrame =
+  /** The columns [[changes]] puts before the batch's. */
+  private val imageColumns = Seq("op", "__key", "__hash")
+
+  /** The [[classified]] rows that are not unchanged, as one flat image
+    * `(op, __key, __hash, <batch columns>)`: the whole delta of one join,
+    * sized by the delta rather than by state, which is what a sync pins
+    * (or collects) between diff and write. A delete row carries its key
+    * in `__key` and nulls elsewhere; a create row carries the batch row
+    * and its change hash. The batch's own `__hash`, if any, is not
+    * repeated among its columns. */
+  def changes(batch: DataFrame, state: DataFrame): DataFrame = {
+    val columns = batch.columns.toSeq.filterNot(_ == "__hash")
     classified(batch, state).filter(col("op") =!= OpUnchanged)
+      .select(col("op") +: col("__key") +: col("b.__hash").as("__hash") +:
+        columns.map(c => col(s"b.`$c`")): _*)
+  }
 
-  /** The delta of a [[changes]] image whose batch had `batchColumns`: two
-    * filters of `changes`, so when it is pinned neither side re-runs the
-    * join. */
-  def delta(changes: DataFrame, batchColumns: Seq[String]): Delta =
+  /** The delta of a [[changes]] image: two filters of it, creates as the
+    * batch's columns and deletes as their key, so when the image is pinned
+    * or driver-local neither side re-runs the join. */
+  def delta(changes: DataFrame): Delta =
     Delta(
-      changes.filter(col("op") === OpCreate)
-        .select(batchColumns.map(c => col(s"b.`$c`")): _*),
-      changes.filter(col("op") === OpDelete).select(col(s"s.$key").as(key)))
+      changes.filter(col("op") === OpCreate).select(changes.columns.toSeq
+        .filterNot(imageColumns.contains).map(c => col(s"`$c`")): _*),
+      changes.filter(col("op") === OpDelete).select(col("__key").as(key)))
 
   /** (created, deleted) row counts of a [[changes]] image from ONE
     * aggregate — one job over a pinned image, where a `count()` on each

@@ -24,17 +24,20 @@ import graft.state.AtomicTable.local
   * Differences by design:
   *  - transforms are lazy Catalyst plans, not template strings; EXTRACT and
   *    TRANSFORM fuse into one scan per function with column pruning;
-  *  - RECONCILE is a distributed full-outer join against the parquet
-  *    snapshot (see [[Reconcile]]), whose changed rows are pinned
-  *    (MEMORY_AND_DISK) per function, so Spark's laziness cannot
-  *    recompute the diff against already-advanced state — the explicit
-  *    materialization boundary SURVEY §7.5 calls out — and both delta
-  *    counts and both delta sides come from that one join;
   *  - a reconciled function's batch is collapsed to one row per key
   *    before the diff, the row with the smallest change hash, so the diff,
   *    the sink, the state and VERIFY see the same row (the reference's
   *    winner is the last in batch order, `recon.go:72-131`; a distributed
   *    bag has no order);
+  *  - a pass pins (MEMORY_AND_DISK) the document, and per reconciled
+  *    function two frames: that collapsed batch with its change hash, and
+  *    its [[Reconcile.changes]] image, a distributed full-outer join
+  *    against the parquet snapshot (see [[Reconcile]]). Spark's laziness
+  *    then cannot recompute the diff against already-advanced state (the
+  *    explicit materialization boundary SURVEY §7.5 calls out); both delta
+  *    counts and both delta sides come from that one join; and VERIFY
+  *    diffs the cached batch, so each function's transform, collapse and
+  *    hash run once per pass;
   *  - every sink and state write is one [[AtomicTable.replaceKeyed]]: the
   *    table minus the delta's keys, plus its rows. A delta whose pinned
   *    rows are small (within a measured 1 MB and within
@@ -267,11 +270,11 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
       // out of state entirely, so it re-enters the diff as toCreate on
       // every sync until both endpoints exist — and an edge removed by
       // detachEdges reconverges the same way when its node returns.
-      // keyed is pinned: it feeds the diff and the convergence check —
-      // without the persist each would re-run the two node-table endpoint
-      // joins.
-      val keyed = pass.pin(sink.resolveEndpoints(batch, r.labelA, r.labelB)
-        .withColumn(key, GraphSink.pairKey))
+      // The resolved pairs are not pinned here: diff pins them collapsed,
+      // and the convergence check reads that cache, so the two node-table
+      // endpoint joins run once.
+      val keyed = sink.resolveEndpoints(batch, r.labelA, r.labelB)
+        .withColumn(key, GraphSink.pairKey)
       (fn, i, r, diff(spec, fn, keyed, pass))
     }
     val written = diffs.map { case (fn, i, r, d) =>
@@ -294,36 +297,36 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
   }
 
   /** RECONCILE, step 1 of one reconciled function (a node function, or a
-    * relation with `reconcile = true`): collapses `batch` to one row per
-    * key, the row with the smallest change hash, so the diff, the sink,
-    * the state and VERIFY all see the same row; pins the changed rows
-    * against the committed state and submits the job that counts them —
-    * which also builds the pinned cache — and, when they fit on the
-    * driver, collects them there in one job. The sink delta and the state
-    * post-image (the prior state minus the changed keys, plus the changed
-    * (key, hash) rows) are frames over those rows, driver-local when
-    * collected. */
+    * relation with `reconcile = true`): pins `batch` collapsed to one row
+    * per key, the row with the smallest change hash, with that hash, so
+    * the diff, the sink, the state and VERIFY all see the same row and
+    * VERIFY reads it back instead of planning it again; pins the
+    * [[Reconcile.changes]] image against the committed state and submits
+    * the job that counts it, which also builds both caches, and, when the
+    * image fits on the driver, collects it there in one job. The sink
+    * delta is [[Reconcile.delta]] of those rows and the state post-image
+    * is the prior state minus the changed keys, plus the created (key,
+    * hash) rows; both are driver-local when collected. A side the count
+    * found empty is an empty driver-local frame either way, so a write
+    * over the other side alone can prune it. */
   private def diff(spec: IntegrationSpec, fn: FunctionSpec, batch: DataFrame,
       pass: Pass): CompletableFuture[Changed] = {
-    val keyed = Transforms.lastWinsByKey(Reconcile.withHash(batch), key,
-      col("__hash")).drop("__hash")
+    val keyed = pass.pin(Transforms.lastWinsByKey(Reconcile.withHash(batch),
+      key, col("__hash")))
     val state = store.read(spec.key, fn.name)
     val changes = pass.pin(Reconcile.changes(keyed, state))
-    val columns = keyed.columns.toSeq
-    // (__op, __key, __hash, batch columns…)
-    val picked = changes.select(col("op").as("__op") +: col("__key") +:
-      col("b.__hash") +: columns.map(c => col(s"b.`$c`")): _*)
     pass.submit {
       val (nc, nd) = Reconcile.deltaCounts(changes)
       val rows = if ((nc > 0 || nd > 0) && fitsOnDriver(changes))
-        local(spark, picked.collect().toSeq, picked.schema) else picked
-      val creates = rows.filter(col("__op") === Reconcile.OpCreate)
-      val deletes = rows.filter(col("__op") === Reconcile.OpDelete)
-        .select(col("__key").as(key))
-      Changed(keyed, nc, nd,
-        Reconcile.Delta(creates.select(columns.map(c => col(s"`$c`")): _*), deletes),
-        AtomicTable.replaceKeyed(state, col(key),
-          creates.select(col("__key").as(key), col("__hash").as("hash")), deletes))
+        local(spark, changes.collect().toSeq, changes.schema) else changes
+      def side(n: Long, df: DataFrame) =
+        if (n > 0) df else local(spark, Nil, df.schema)
+      val d = Reconcile.delta(rows)
+      val deletes = side(nd, d.toDelete)
+      Changed(keyed, nc, nd, Reconcile.Delta(side(nc, d.toCreate), deletes),
+        AtomicTable.replaceKeyed(state, col(key), side(nc,
+          rows.filter(col("op") === Reconcile.OpCreate)
+            .select(col("__key").as(key), col("__hash").as("hash"))), deletes))
     }
   }
 
@@ -332,9 +335,9 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
     * commits the post-image. Returns the submitted convergence check.
     *
     * The R5 convergence check always runs (reference main.go:224-237): a
-    * second diff of the batch against the state just committed must be
-    * empty, else the pass fails with `commit failed for <fn>` and counts
-    * the unconverged rows. The reference checks nodes only (main.go:235
+    * second diff of the pinned batch against the state just committed
+    * must be empty, else the pass fails with `commit failed for <fn>` and
+    * counts the unconverged rows. The reference checks nodes only (main.go:235
     * guards CREATE_NODE); reconciled edges get the same guarantee. */
   private def write(spec: IntegrationSpec, fn: FunctionSpec, c: Changed,
       noun: String, pass: Pass)(apply: Reconcile.Delta => Unit)
@@ -423,9 +426,9 @@ object SyncDriver {
     * 10 MB broadcast threshold (SCALING.md). */
   private val LocalDeltaBytes = 1L << 20
 
-  /** A reconciled function's delta after step 1: its keyed batch, its
-    * counts, the two sides the sink applies and the post-image the store
-    * commits. */
+  /** A reconciled function's delta after step 1: its pinned, collapsed
+    * batch with `__hash`, its counts, the two sides the sink applies and
+    * the post-image the store commits. */
   private final case class Changed(keyed: DataFrame, created: Long,
       deleted: Long, delta: Reconcile.Delta, postImage: DataFrame)
 

@@ -135,13 +135,19 @@ class MirroredGraphSink(spark: SparkSession, root: String,
     * row back), so the remote must end created too — forwarding the
     * merge first would let the trailing DETACH DELETE win and diverge the
     * two stores. Reconcile.diff never emits an overlapping key, but the
-    * sink must not depend on every caller being a reconcile. */
+    * sink must not depend on every caller being a reconcile.
+    *
+    * The merges are the local table's rows of the created keys, read back
+    * after the local write: when `toCreate` holds a key twice, the local
+    * replace picks its winner, and the remote must get that row, not
+    * another one. */
   override def applyNodeDelta(label: String, toCreate: DataFrame,
       toDelete: DataFrame): Unit = {
     super.applyNodeDelta(label, toCreate, toDelete)
     writer.write(toDelete.select(col("external_id")),
       CypherDialect.deleteNodes(label))
-    writer.write(toCreate.dropDuplicates("external_id"),
+    writer.write(readNodes(label, toCreate.schema)
+      .join(toCreate.select(col("external_id")), Seq("external_id"), "left_semi"),
       CypherDialect.mergeNodes(label))
   }
 

@@ -42,20 +42,10 @@ class AtomicTable(spark: SparkSession, base: String) {
 
   private val PtrRe = "ptr-([0-9]{12}-.+)".r
 
-  /** (counter, full version name) of the newest committed pointer. */
-  private def currentPtr(f: FileSystem): Option[(Long, String)] = {
-    val b = new Path(base)
-    if (!f.exists(b)) return None
-    val ptrs = f.listStatus(b).iterator.map(_.getPath.getName).collect {
-      case PtrRe(ver) => (ver.take(12).toLong, ver)
-    }.toSeq
-    if (ptrs.isEmpty) None else Some(ptrs.maxBy(_._1))
-  }
-
   private def dataDir(ver: String) = new Path(base, s"v-$ver")
 
   /** All committed pointers as (counter, version name). */
-  private def allPtrs(f: FileSystem): Seq[(Long, String)] = {
+  private def ptrs(f: FileSystem): Seq[(Long, String)] = {
     val b = new Path(base)
     if (!f.exists(b)) return Nil
     f.listStatus(b).iterator.map(_.getPath.getName).collect {
@@ -70,30 +60,28 @@ class AtomicTable(spark: SparkSession, base: String) {
     * non-idempotent fold (e.g. additive count maintenance) replay-safe.
     * Ties on counter (a replay re-published the same version) resolve
     * by version name — both hold identical recomputed data, the name
-    * order just makes the pick deterministic. */
-  def readUpTo(maxCounter: Long, schema: StructType): DataFrame = {
-    val f = fs
-    val eligible = allPtrs(f).filter(_._1 <= maxCounter)
-    if (eligible.isEmpty) {
-      if (schema != null)
+    * order just makes the pick deterministic. Empty DataFrame with
+    * `schema` if no such image exists (schema == null → caller must
+    * handle emptiness itself). */
+  def readUpTo(maxCounter: Long, schema: StructType): DataFrame =
+    ptrs(fs).filter(_._1 <= maxCounter).maxOption match {
+      case Some((_, ver)) =>
+        if (schema != null)
+          spark.read.schema(schema).parquet(dataDir(ver).toString)
+        else spark.read.parquet(dataDir(ver).toString)
+      case None if schema != null =>
         spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else spark.emptyDataFrame
-    } else {
-      val (_, ver) = eligible.maxBy(identity)
-      if (schema != null)
-        spark.read.schema(schema).parquet(dataDir(ver).toString)
-      else spark.read.parquet(dataDir(ver).toString)
+      case None => spark.emptyDataFrame
     }
-  }
 
   /** Publish `df` at an EXPLICIT counter — the foreachBatch
     * transactional idiom with counter = batchId + 1: a replayed batch
     * (crash after this commit, before the streaming checkpoint advanced)
     * recomputes from the same [[readUpTo]] image and re-commits the
     * same counter, so the second pointer is a harmless duplicate of
-    * identical data rather than a double-application. GC keeps the
-    * current and immediately previous counters (the [[commit]] rule). */
+    * identical data rather than a double-application. GC keeps `ctr`
+    * and the highest committed counter below it ([[gcBelow]]). */
   def commitAt(ctr: Long, df: DataFrame): Unit = {
     require(ctr >= 1, s"counter must be >= 1, got $ctr")
     val f = fs
@@ -101,7 +89,7 @@ class AtomicTable(spark: SparkSession, base: String) {
     // not ctr−1: batch ids can have gaps (empty batches commit nothing),
     // and GC'ing by ctr−1 could collect the very image a replay of THIS
     // batch still needs to re-read
-    val prev = allPtrs(f).map(_._1).filter(_ < ctr)
+    val prev = ptrs(f).map(_._1).filter(_ < ctr)
       .maxOption.getOrElse(ctr - 1)
     val ver = f"$ctr%012d-${java.util.UUID.randomUUID()}"
     df.write.mode(SaveMode.Overwrite).parquet(dataDir(ver).toString)
@@ -110,30 +98,13 @@ class AtomicTable(spark: SparkSession, base: String) {
     gcBelow(f, prev)
   }
 
-  /** Read the committed image; empty DataFrame with `schema` if never
-    * committed (schema == null → caller must handle emptiness itself). */
-  def read(schema: StructType): DataFrame = currentPtr(fs) match {
-    case Some((_, ver)) =>
-      if (schema != null)
-        spark.read.schema(schema).parquet(dataDir(ver).toString)
-      else spark.read.parquet(dataDir(ver).toString)
-    case None if schema != null =>
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    case None => spark.emptyDataFrame
-  }
+  /** Read the committed image: the newest one ([[readUpTo]]). */
+  def read(schema: StructType): DataFrame = readUpTo(Long.MaxValue, schema)
 
-  /** Atomically publish `df` as the new table image. */
-  def commit(df: DataFrame): Unit = {
-    val f = fs
-    val prev = currentPtr(f)
-    val ctr = prev.map(_._1 + 1).getOrElse(1L)
-    val ver = f"$ctr%012d-${java.util.UUID.randomUUID()}"
-    df.write.mode(SaveMode.Overwrite).parquet(dataDir(ver).toString)
-    val ptr = new Path(base, s"ptr-$ver")
-    require(f.createNewFile(ptr), s"pointer create failed: $ptr")
-    gcBelow(f, ctr - 1)
-  }
+  /** Atomically publish `df` as the new table image, one counter above
+    * the newest ([[commitAt]]; its previous image is then the newest). */
+  def commit(df: DataFrame): Unit =
+    commitAt(ptrs(fs).map(_._1).maxOption.getOrElse(0L) + 1, df)
 
   /** GC (best-effort): keep every version with counter ≥ `keepFrom` —
     * the current AND the immediately previous committed version — a

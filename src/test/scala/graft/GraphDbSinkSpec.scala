@@ -204,6 +204,28 @@ class GraphDbSinkSpec extends AnyFunSuite {
     assert(db.synchronized(db.edges.contains(("r", "A", "x", "B", "y"))))
   }
 
+  test("a key created twice reaches the remote with the properties the " +
+      "local table keeps, driver-local or distributed") {
+    import spark.implicits._
+    val (_, sink, db) = env("dup-create")
+    val none = Seq.empty[String].toDF("external_id")
+    val twice = Seq(("k", "first"), ("k", "last"), ("j", "only"))
+      .toDF("external_id", "name")
+    Seq("local" -> twice, "distributed" -> twice.repartition(2)).foreach {
+      case (label, create) =>
+        sink.applyNodeDelta(label, create, none)
+        val local = sink.readNodes(label).collect()
+          .map(r => r.getAs[String]("external_id") -> r.getAs[String]("name")).toMap
+        val remote = db.synchronized(db.nodes.collect {
+          case ((`label`, id), props) => id -> props("name")
+        }.toMap)
+        assert(local.keySet === Set("j", "k"), label)
+        assert(remote === local, label)
+    }
+    // driver-local creates keep the last row in list order
+    assert(db.synchronized(db.nodes(("local", "k"))("name")) === "last")
+  }
+
   test("reconciled-edge mode forwards pair deletes as edge DELETE") {
     val (driver, sink, db) = env("recon-edges")
     import graft.pipeline.{CreateNode, CreateRelation, FunctionSpec, IntegrationSpec}
