@@ -23,8 +23,7 @@ import org.apache.spark.sql.SparkSession
   * input bytes ~10–50× into the shuffle, so sizing off INPUT bytes
   * needs the headroom (sf0.1 17.5 MB → 32 = the core floor, unchanged
   * gate shape; the 1.6 GB 100× rung → ~384, the neighborhood the rung
-  * experiments proved out at 320). `SPARK_GRAFT_SHUFFLE` still
-  * overrides for rung experiments that isolate the knob. */
+  * experiments proved out at 320). */
 object GraftSession {
 
   val TargetBytesPerPartition: Long = 4L << 20
@@ -42,13 +41,12 @@ object GraftSession {
   }
 
   /** ceil(inputBytes / target), floored at `cores`, capped at
-    * [[MaxPartitions]]; `SPARK_GRAFT_SHUFFLE` wins when set. */
-  def derivedShufflePartitions(sfDir: String, cores: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse {
-      val derived = (inputBytes(sfDir) + TargetBytesPerPartition - 1) /
-        TargetBytesPerPartition
-      math.min(MaxPartitions, math.max(cores, derived)).toInt
-    }
+    * [[MaxPartitions]]. */
+  def derivedShufflePartitions(sfDir: String, cores: Int): Int = {
+    val derived = (inputBytes(sfDir) + TargetBytesPerPartition - 1) /
+      TargetBytesPerPartition
+    math.min(MaxPartitions, math.max(cores, derived)).toInt
+  }
 
   /** The shared local session: `cores` threads, derived shuffle
     * partitions, AQE on, UTC, nanos back-compat, UI off. */

@@ -73,6 +73,28 @@ object SparkEntry {
     df.withColumn("ts", tsNanos(df.schema("ts").dataType))
   }
 
+  /** `embeddings` as the similarity family reads it: `vec_id` as `id`,
+    * `embedding` as `vec`, then the `extra` columns by name. */
+  private[graft] def embeddings(s: SparkSession, dir: String,
+      extra: String*): DataFrame =
+    t(s, dir, "embeddings").select(Seq(col("vec_id").as("id"),
+      col("embedding").as("vec")) ++ extra.map(col): _*)
+
+  /** The IVM split of a corpus keyed by `id`, shared by the maintained
+    * count, classifier and index families: the `base` image
+    * (`id % 3 < 2`), the `added` rows (`id % 3 = 2`), the `__op`-signed
+    * `delta` that adds them (+1) and retracts the base rows with
+    * `id % 5 = 0` (−1), and the `post`-delta corpus those two give. The
+    * oracle twins spell the same predicates out and rebuild `post` from
+    * scratch, so maintenance must equal recomputation. */
+  private[graft] final class IvmSplit(corpus: DataFrame, id: String) {
+    val base: DataFrame = corpus.filter(col(id) % 3 < 2)
+    val added: DataFrame = corpus.filter(col(id) % 3 === 2)
+    lazy val delta: DataFrame = added.withColumn("__op", lit(1))
+      .unionByName(base.filter(col(id) % 5 === 0).withColumn("__op", lit(-1)))
+    lazy val post: DataFrame = added.unionByName(base.filter(col(id) % 5 =!= 0))
+  }
+
   /** The `ts`-canonicalizing expression behind [[events]], shared with the
     * streaming specs (a readStream source can't go through the batch
     * accessor but must normalize identically for batch/stream parity). */
@@ -445,17 +467,12 @@ object SparkEntry {
     * maintained table instead of re-running the base tokenize+count and
     * the delta maintenance (round-16, guide §2.4). */
   private[graft] val knMaintainedTrigramCounts = memo("kn_ivm_counts") { (sess, d) =>
-    val docs = t(sess, d, "documents")
-    val base = docs.filter(col("doc_id") % 3 < 2)
+    val split = new IvmSplit(t(sess, d, "documents"), "doc_id")
     val state = graft.operators.Dedup
-      .shingleStream(base, "text", "doc_id", n = 3)
+      .shingleStream(split.base, "text", "doc_id", n = 3)
       .groupBy(col("s")).agg(count(lit(1)).as("c123"))
-    val delta = docs.filter(col("doc_id") % 3 === 2)
-      .withColumn("__op", lit(1))
-      .unionByName(base.filter(col("doc_id") % 5 === 0)
-        .withColumn("__op", lit(-1)))
     TextAnalysis
-      .maintainTrigramCounts(state, delta, "text", "doc_id", "__op")
+      .maintainTrigramCounts(state, split.delta, "text", "doc_id", "__op")
       .localCheckpoint()
   }
 
@@ -503,8 +520,7 @@ object SparkEntry {
     * the table is |q|·|corpus| eval-cross rows, the documented bounded
     * evaluation-tier exception). */
   private[graft] val sq8CandTable = memo("sq8_cand") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = embeddings(sess, d)
     Similarity.sq8CandidateTable(emb.filter(col("id") < 10),
       emb.filter(col("id") >= 10)).localCheckpoint()
   }
@@ -526,15 +542,45 @@ object SparkEntry {
     * discipline). */
   private[graft] val KnApplySplit = 2
 
+  /** The skeleton of every frozen-model memo: a temp
+    * [[graft.state.ModelRegistry]] of its own (rooted at a fresh
+    * `tempPrefix` dir, deleted when the context stops), the caller's
+    * `publish` into it, a pin of the promoted `model` version
+    * (`snapshot`), and the caller's `score` against that PINNED
+    * artifact with `model_version` stamped on every row — the provenance
+    * a production refresh loop needs to attribute a score to the
+    * artifact that produced it. The memos therefore exercise the real
+    * registry round-trip, never an in-session shortcut. */
+  private def frozenScores(sess: SparkSession, tempPrefix: String,
+      model: String)(publish: graft.state.ModelRegistry => Unit)(
+      score: graft.state.ModelRegistry#Pinned => DataFrame): DataFrame = {
+    val reg = new graft.state.ModelRegistry(sess,
+      newModelTempRoot(sess, tempPrefix))
+    publish(reg)
+    val pin = reg.snapshot(model)
+    score(pin).withColumn("model_version", lit(pin.version))
+  }
+
+  /** [[frozenScores]] for a refresh loop: publish v1 with `publishV1`,
+    * pin it, and promote as v2 the tables `maintain` derives from that
+    * pin (v1's frozen tables reused, the maintained ones replaced), so
+    * the refresh pays delta-sized work plus one manifest swap; `score`
+    * then reads the pinned v2. */
+  private def refreshedScores(sess: SparkSession, tempPrefix: String,
+      model: String)(publishV1: graft.state.ModelRegistry => Unit)(
+      maintain: graft.state.ModelRegistry#Pinned => Seq[(String, DataFrame)])(
+      score: graft.state.ModelRegistry#Pinned => DataFrame): DataFrame =
+    frozenScores(sess, tempPrefix, model) { reg =>
+      publishV1(reg)
+      reg.publish(model, maintain(reg.snapshot(model)))
+    }(score)
+
   /** Frozen-model LM scoring (`kn_apply`): ONE train + publish + pin +
     * score pass per (session, dir). The train half builds the pruned
     * trigram-KN model ([[TextAnalysis.kn3Model]]), its six tables are
-    * PUBLISHED as one immutable version through
-    * [[graft.state.ModelRegistry]] (single manifest swap — no torn
+    * PUBLISHED as one immutable version (single manifest swap — no torn
     * cross-table mix under refresh), and the apply half scores the
-    * held-out batch against the PINNED reloaded artifact, stamping
-    * `model_version` on every row — the query exercises the real
-    * registry round-trip, never an in-session shortcut (round-trip ≡
+    * held-out batch against the pinned reloaded artifact (round-trip ≡
     * in-session equality is pinned in LmApplySpec; refresh/rollback
     * stability in ModelRegistrySpec). This is the production CCNet
     * shape: the gate LM is trained once on a high-quality corpus and
@@ -542,43 +588,31 @@ object SparkEntry {
     * 2020). */
   private[graft] val knApplyScores = memo("kn_apply") { (sess, d) =>
     val docs = t(sess, d, "documents")
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-kn-apply"))
-    TextAnalysis.kn3PublishModel(
-      docs.filter(col("doc_id") % KnApplySplit === 0), "text",
-      "doc_id", reg, "lm")
-    // scorer pins the promoted version and stamps it on every row —
-    // the provenance a production refresh loop needs to attribute a
-    // score to the artifact that produced it
-    val pin = reg.snapshot("lm")
-    TextAnalysis.kn3Score(
+    frozenScores(sess, "graft-kn-apply", "lm")(
+      TextAnalysis.kn3PublishModel(
+        docs.filter(col("doc_id") % KnApplySplit === 0), "text",
+        "doc_id", _, "lm"))(pin =>
+      TextAnalysis.kn3Score(
         docs.filter(col("doc_id") % KnApplySplit === 1), "text",
-        "doc_id", TextAnalysis.kn3FromRegistry(pin))
-      .withColumn("model_version", lit(pin.version))
+        "doc_id", TextAnalysis.kn3FromRegistry(pin)))
   }
 
-  /** Frozen-classifier scoring (`nbc_apply` / `nbc_eval`): ONE train +
-    * publish + pin + score pass per (session, dir) — the kn_apply
+  /** Frozen-classifier scoring (`nbc_apply` / `nbc_eval`): the kn_apply
     * discipline applied to the trained Naive-Bayes language classifier
     * ([[graft.operators.NaiveBayes]]): even doc_ids train, the three
-    * model tables publish as one [[graft.state.ModelRegistry]] version
-    * (single manifest swap), odd doc_ids score against the PINNED
-    * reloaded artifact with `model_version` stamped per row (the CCNet
-    * lang-id gate's production shape — classify crawl batches with a
-    * model trained once and frozen). */
+    * model tables publish as one version, odd doc_ids score against the
+    * pinned artifact (the CCNet lang-id gate's production shape —
+    * classify crawl batches with a model trained once and frozen). */
   private[graft] val nbcApplyScores = memo("nbc_apply") { (sess, d) =>
     val docs = t(sess, d, "documents")
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-nbc-apply"))
-    graft.operators.NaiveBayes.nbcPublishModel(
-      docs.filter(col("doc_id") % KnApplySplit === 0), "text", "lang",
-      reg, "nbc")
-    val pin = reg.snapshot("nbc")
-    graft.operators.NaiveBayes.nbcScore(
+    frozenScores(sess, "graft-nbc-apply", "nbc")(
+      graft.operators.NaiveBayes.nbcPublishModel(
+        docs.filter(col("doc_id") % KnApplySplit === 0), "text", "lang",
+        _, "nbc"))(pin =>
+      graft.operators.NaiveBayes.nbcScore(
         docs.filter(col("doc_id") % KnApplySplit === 1), "text",
         "doc_id", "lang",
-        graft.operators.NaiveBayes.nbcFromRegistry(pin))
-      .withColumn("model_version", lit(pin.version))
+        graft.operators.NaiveBayes.nbcFromRegistry(pin)))
       .localCheckpoint()
   }
 
@@ -589,96 +623,65 @@ object SparkEntry {
     * corpus and the same delta; without the memo each re-ran the
     * corpus-width gram explodes). */
   private[graft] val nbcMaintainedCounts = memo("nbc_ivm_counts") { (sess, d) =>
-    val docs = t(sess, d, "documents")
-    val base = docs.filter(col("doc_id") % 3 < 2)
-    val delta = docs.filter(col("doc_id") % 3 === 2)
-      .withColumn("__op", lit(1))
-      .unionByName(base.filter(col("doc_id") % 5 === 0)
-        .withColumn("__op", lit(-1)))
+    val split = new IvmSplit(t(sess, d, "documents"), "doc_id")
     graft.operators.NaiveBayes.maintainGramCounts(
-        graft.operators.NaiveBayes.trainGramCounts(base, "text",
+        graft.operators.NaiveBayes.trainGramCounts(split.base, "text",
           "lang"),
-        delta, "text", "lang", "__op")
+        split.delta, "text", "lang", "__op")
       .localCheckpoint()
   }
 
-  /** Frozen-index ANN scoring (`ann_apply`): ONE build + publish + pin +
-    * serve pass per (session, dir) — the kn_apply discipline for the
-    * similarity family. The IVF index (deterministic lowest-id
+  /** Frozen-index ANN scoring (`ann_apply`): the kn_apply discipline for
+    * the similarity family. The IVF index (deterministic lowest-id
     * centroids + permille-cosine cell assignments) publishes as one
-    * [[graft.state.ModelRegistry]] version; the held-out query batch
-    * scores against the PINNED artifact with `model_version` stamped
-    * per row. */
+    * version; the held-out query batch scores against the pinned
+    * artifact. */
   private[graft] val annApplyScores = memo("ann_apply") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = embeddings(sess, d)
     val corpus = emb.filter(col("id") % 3 =!= 0)
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-ann-apply"))
-    Similarity.ivfPublish(corpus, reg, "ivf")
-    val pin = reg.snapshot("ivf")
-    Similarity.annTopKIvfStored(
-        emb.filter(col("id") % 3 === 0 && col("id") < 30), corpus, 5,
-        pin)
-      .withColumn("model_version", lit(pin.version))
+    frozenScores(sess, "graft-ann-apply", "ivf")(
+      Similarity.ivfPublish(corpus, _, "ivf"))(
+      Similarity.annTopKIvfStored(
+        emb.filter(col("id") % 3 === 0 && col("id") < 30), corpus, 5, _))
       .localCheckpoint()
   }
 
   /** Composed ANN refresh loop (`ann_refresh`): ONE
     * build-v1 → maintain → promote-v2 → serve pass per (session, dir).
     * The maintained assignments are REREAD from the published v1
-    * artifact (never recomputed), so the refresh pays delta-sized
-    * assignment work plus one manifest swap — the production cadence
-    * for a corpus that grows and retracts under a frozen centroid
-    * set. */
+    * artifact (never recomputed) under the frozen centroid set — the
+    * production cadence for a corpus that grows and retracts. */
   private[graft] val annRefreshScores = memo("ann_refresh") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val base = emb.filter(col("id") % 3 < 2)
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-ann-refresh"))
-    Similarity.ivfPublish(base, reg, "ivf") // v1
-    val v1 = reg.snapshot("ivf")
-    val delta = emb.filter(col("id") % 3 === 2)
-      .withColumn("__op", lit(1))
-      .unionByName(base.filter(col("id") % 5 === 0)
-        .withColumn("__op", lit(-1)))
-    reg.publish("ivf", Seq( // v2: frozen centroids, maintained cells
+    val emb = embeddings(sess, d)
+    val split = new IvmSplit(emb, "id")
+    refreshedScores(sess, "graft-ann-refresh", "ivf")(
+      Similarity.ivfPublish(split.base, _, "ivf"))(v1 => Seq(
       "centroids" -> v1.table("centroids"),
       "assignments" -> Similarity.ivfMaintainAssignments(
-        v1.table("assignments"), delta, v1.table("centroids"),
-        "__op")))
-    val pin = reg.snapshot("ivf")
-    val postCorpus = emb.filter(col("id") % 3 === 2)
-      .unionByName(base.filter(col("id") % 5 =!= 0))
-    Similarity.annTopKIvfStored(
+        v1.table("assignments"), split.delta, v1.table("centroids"),
+        "__op")))(
+      Similarity.annTopKIvfStored(
         emb.filter(col("id") % 3 === 2 && col("id") < 30),
-        postCorpus, 5, pin)
-      .withColumn("model_version", lit(pin.version))
+        split.post, 5, _))
       .localCheckpoint()
   }
 
   /** Frozen compressed-index ANN scoring (`ann_ivfpq_apply`): the
     * ann_apply discipline for the PQ tier — the whole compressed index
     * (centroids + per-subspace codebook + code table + build params)
-    * publishes as ONE [[graft.state.ModelRegistry]] version; the
-    * held-out query batch scores against the PINNED reloaded artifact
-    * ([[Similarity.annTopKIvfPqStored]]) with `model_version` stamped
-    * per row. Stored-path ≡ retrain-path bit-equality is pinned in
+    * publishes as ONE version; the held-out query batch scores against
+    * the pinned artifact ([[Similarity.annTopKIvfPqStored]]).
+    * Stored-path ≡ retrain-path bit-equality is pinned in
     * DedupSimilaritySpec, so the ADC recall receipt carries over. */
   private[graft] val annIvfPqApplyScores = memo("ann_ivfpq_apply") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = embeddings(sess, d)
     val corpus = emb.filter(col("id") % 3 =!= 0)
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-ann-ivfpq-apply"))
-    Similarity.ivfPqPublish(corpus, reg, "ivfpq",
-      nSub = 8, nCentroids = 128)
-    val pin = reg.snapshot("ivfpq")
-    Similarity.annTopKIvfPqStored(
+    frozenScores(sess, "graft-ann-ivfpq-apply", "ivfpq")(
+      Similarity.ivfPqPublish(corpus, _, "ivfpq",
+        nSub = 8, nCentroids = 128))(
+      Similarity.annTopKIvfPqStored(
         emb.filter(col("id") % 3 === 0 && col("id") < 30), corpus, 5,
-        pin, rerank = Similarity.Sq8Rerank)
-      .withColumn("model_version", lit(pin.version))
+        _, rerank = Similarity.Sq8Rerank))
       .localCheckpoint()
   }
 
@@ -689,17 +692,12 @@ object SparkEntry {
     * against the pinned codes, exact-rerank the shortlist
     * ([[Similarity.annTopKSq8Stored]]). */
   private[graft] val annSq8ApplyScores = memo("ann_sq8_apply") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = embeddings(sess, d)
     val corpus = emb.filter(col("id") % 3 =!= 0)
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-ann-sq8-apply"))
-    Similarity.sq8Publish(corpus, reg, "sq8")
-    val pin = reg.snapshot("sq8")
-    Similarity.annTopKSq8Stored(
-        emb.filter(col("id") % 3 === 0 && col("id") < 30), corpus, 5,
-        pin)
-      .withColumn("model_version", lit(pin.version))
+    frozenScores(sess, "graft-ann-sq8-apply", "sq8")(
+      Similarity.sq8Publish(corpus, _, "sq8"))(
+      Similarity.annTopKSq8Stored(
+        emb.filter(col("id") % 3 === 0 && col("id") < 30), corpus, 5, _))
       .localCheckpoint()
   }
 
@@ -715,57 +713,33 @@ object SparkEntry {
     * the post-delta index from scratch with the BASE-frozen artifacts,
     * so maintenance + promotion + serve must compose bit-exactly. */
   private[graft] val annIvfPqRefreshScores = memo("ann_ivfpq_refresh") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val base = emb.filter(col("id") % 3 < 2)
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-ann-ivfpq-refresh"))
-    Similarity.ivfPqPublish(base, reg, "ivfpq",
-      nSub = 8, nCentroids = 128) // v1
-    val v1 = reg.snapshot("ivfpq")
-    val delta = emb.filter(col("id") % 3 === 2)
-      .withColumn("__op", lit(1))
-      .unionByName(base.filter(col("id") % 5 === 0)
-        .withColumn("__op", lit(-1)))
-    reg.publish("ivfpq", Seq( // v2: frozen artifacts, maintained codes
+    val emb = embeddings(sess, d)
+    val split = new IvmSplit(emb, "id")
+    refreshedScores(sess, "graft-ann-ivfpq-refresh", "ivfpq")(
+      Similarity.ivfPqPublish(split.base, _, "ivfpq",
+        nSub = 8, nCentroids = 128))(v1 => Seq(
       "meta" -> v1.table("meta"),
       "centroids" -> v1.table("centroids"),
       "codebook" -> v1.table("codebook"),
       "codes" -> Similarity.ivfPqMaintainCodes(
-        v1.table("codes"), delta, v1, "__op")))
-    val pin = reg.snapshot("ivfpq")
-    val postCorpus = emb.filter(col("id") % 3 === 2)
-      .unionByName(base.filter(col("id") % 5 =!= 0))
-    Similarity.annTopKIvfPqStored(
-        emb.filter(col("id") % 3 === 2 && col("id") < 30), postCorpus,
-        5, pin, rerank = Similarity.Sq8Rerank)
-      .withColumn("model_version", lit(pin.version))
+        v1.table("codes"), split.delta, v1, "__op")))(
+      Similarity.annTopKIvfPqStored(
+        emb.filter(col("id") % 3 === 2 && col("id") < 30), split.post,
+        5, _, rerank = Similarity.Sq8Rerank))
       .localCheckpoint()
   }
 
   private[graft] val annSq8RefreshScores = memo("ann_sq8_refresh") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val base = emb.filter(col("id") % 3 < 2)
-    val reg = new graft.state.ModelRegistry(sess,
-      newModelTempRoot(sess, "graft-ann-sq8-refresh"))
-    Similarity.sq8Publish(base, reg, "sq8") // v1
-    val v1 = reg.snapshot("sq8")
-    val delta = emb.filter(col("id") % 3 === 2)
-      .withColumn("__op", lit(1))
-      .unionByName(base.filter(col("id") % 5 === 0)
-        .withColumn("__op", lit(-1)))
-    reg.publish("sq8", Seq( // v2: frozen bounds, maintained codes
+    val emb = embeddings(sess, d)
+    val split = new IvmSplit(emb, "id")
+    refreshedScores(sess, "graft-ann-sq8-refresh", "sq8")(
+      Similarity.sq8Publish(split.base, _, "sq8"))(v1 => Seq(
       "bounds" -> v1.table("bounds"),
       "codes" -> Similarity.sq8MaintainCodes(
-        v1.table("codes"), delta, v1, "__op")))
-    val pin = reg.snapshot("sq8")
-    val postCorpus = emb.filter(col("id") % 3 === 2)
-      .unionByName(base.filter(col("id") % 5 =!= 0))
-    Similarity.annTopKSq8Stored(
-        emb.filter(col("id") % 3 === 2 && col("id") < 30), postCorpus,
-        5, pin)
-      .withColumn("model_version", lit(pin.version))
+        v1.table("codes"), split.delta, v1, "__op")))(
+      Similarity.annTopKSq8Stored(
+        emb.filter(col("id") % 3 === 2 && col("id") < 30), split.post,
+        5, _))
       .localCheckpoint()
   }
 
@@ -781,8 +755,7 @@ object SparkEntry {
     * (one-definition discipline). */
   private[graft] val AnnGateFloorPermille = 300L
   private[graft] val annGateDocs = memo("ann_gate") { (sess, d) =>
-    val emb = t(sess, d, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = embeddings(sess, d)
     val root = newModelTempRoot(sess, "graft-ann-gate")
     val reg = new graft.state.ModelRegistry(sess, root)
     Similarity.ivfPublish(emb.filter(col("id") % 3 =!= 0), reg, "ivf")

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.functions.{col, element_at, lit, split}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.Schemas
@@ -192,12 +192,8 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
       batchRows.map { case (name, rows) => name -> ((pass.await(rows), 0L)) }).toMap
   }
 
-  /** Edge tables are identified by (relType, endpoint labels): the
-    * reference's single `has` type spans three endpoint pairs that Neo4j
-    * distinguishes structurally; a flat table must distinguish them by
-    * name. */
   private def edgeTable(r: CreateRelation): String =
-    s"${r.relType}__${r.labelA}__${r.labelB}"
+    GraphSink.edgeTable(r.relType, r.labelA, r.labelB)
 
   /** Step 2, DETACH DELETE semantics (reference `neo4j.go:117`): edges
     * touching a deleted node go with it — one write per edge table whose
@@ -281,11 +277,9 @@ class SyncDriver(spark: SparkSession, store: SnapshotStore, sink: GraphSink) {
       pass.at = i
       val c = pass.await(d)
       val check = write(spec, fn, c, "edge pairs", pass) { delta =>
-        val deletePairs = delta.toDelete.select(
-          element_at(split(col(key), GraphSink.PairSep), 1).as("a_id"),
-          element_at(split(col(key), GraphSink.PairSep), 2).as("b_id"))
         sink.applyEdgeDelta(edgeTable(r), delta.toCreate.select("a_id", "b_id"),
-          deletePairs, r.labelA, r.labelB, alreadyResolved = true)
+          delta.toDelete.select(GraphSink.pairOf(col(key)): _*), r.labelA,
+          r.labelB, alreadyResolved = true)
       }
       (i, fn.name -> ((c.created, c.deleted)), check)
     }

@@ -592,23 +592,17 @@ private[graft] object DedupModelQueries {
     // maintained-counts → model → classify end to end (the kn_refresh
     // contract for the classifier family).
     Query("nbc_refresh", (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val base = docs.filter(col("doc_id") % 3 < 2)
-      val delta = docs.filter(col("doc_id") % 3 === 2)
-        .withColumn("__op", lit(1))
-        .unionByName(base.filter(col("doc_id") % 5 === 0)
-          .withColumn("__op", lit(-1)))
+      val split = new IvmSplit(t(s, dir, "documents"), "doc_id")
       // prepped variant: the maintained counts are the checkpointed memo
       // — re-checkpointing them inside the model build would copy the
       // vocab table for a barrier that already exists (r17)
       val model = graft.operators.NaiveBayes.nbcModelFromPreppedCounts(
         nbcMaintainedCounts(s, dir),
         graft.operators.NaiveBayes.maintainClassDocCounts(
-          base.groupBy(col("lang")).agg(count(lit(1)).as("n_docs")),
-          delta, "lang", "__op"))
-      graft.operators.NaiveBayes.nbcScore(
-        docs.filter(col("doc_id") % 3 === 2), "text", "doc_id", "lang",
-        model)
+          split.base.groupBy(col("lang")).agg(count(lit(1)).as("n_docs")),
+          split.delta, "lang", "__op"))
+      graft.operators.NaiveBayes.nbcScore(split.added, "text", "doc_id",
+        "lang", model)
     },
       Oracle(
         // classifier-refresh replay: the nbc_apply scoring SQL with the

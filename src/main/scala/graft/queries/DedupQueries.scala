@@ -857,8 +857,7 @@ private[graft] object DedupQueries {
       val textPairs = docDupGraph(s, dir)._1
         .select(col("a"), col("b"), lit(1L).as("tp"))
       val embPairs = Dedup.embeddingCosineLsh(
-          t(s, dir, "embeddings")
-            .select(col("vec_id").as("id"), col("embedding").as("vec")),
+          embeddings(s, dir),
           "vec", "id", thresholdPermille = 400)
         .select(col("a"), col("b"), lit(1L).as("ep"))
       textPairs.join(embPairs, Seq("a", "b"), "full_outer")
@@ -1164,9 +1163,7 @@ private[graft] object DedupQueries {
 
     Query("dedup_embed_cosine", (s, dir) =>
       Dedup.embeddingCosinePairs(
-        t(s, dir, "embeddings").filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"),
-            col("label")),
+        embeddings(s, dir, "label").filter(col("id") % 10 === 0),
         "vec", "id", thresholdPermille = 300)
         .select(col("a"), col("b"), col("cos_permille")),
       Oracle("""WITH v AS (SELECT vec_id AS id, label,
@@ -1187,8 +1184,7 @@ private[graft] object DedupQueries {
     // threshold as dedup_embed_cosine, whose output is its superset.
     Query("dedup_embed_lsh", (s, dir) =>
       Dedup.embeddingCosineLsh(
-        t(s, dir, "embeddings").filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec")),
+        embeddings(s, dir).filter(col("id") % 10 === 0),
         "vec", "id", thresholdPermille = 300),
       Oracle(dedupEmbedLshSql)),
 
@@ -1200,8 +1196,7 @@ private[graft] object DedupQueries {
     // survives, deterministic centroids/tie-breaks throughout).
     Query("semdedup", (s, dir) =>
       Similarity.semDedup(
-        t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec")),
+        embeddings(s, dir),
         nCells = 16, thresholdPermille = 350),
       Oracle(
         // same deterministic-centroid/argmax CTEs as ann_ivf; pruned =

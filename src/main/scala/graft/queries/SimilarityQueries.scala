@@ -16,8 +16,7 @@ private[graft] object SimilarityQueries {
   lazy val all: Seq[Query] = Seq(
     // ===== extensions: similarity search =====
     Query("ann_bruteforce", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       Similarity.bruteForceTopK(emb.filter(col("id") < 10),
         emb.filter(col("id") >= 10), 5)
     },
@@ -36,8 +35,7 @@ private[graft] object SimilarityQueries {
         |WHERE rn <= 5""".stripMargin)),
 
     Query("ann_lsh", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       Similarity.annTopK(emb.filter(col("id") < 10),
         emb.filter(col("id") >= 10), 5)
     },
@@ -126,8 +124,7 @@ private[graft] object SimilarityQueries {
     // approximate tier: blocking_recall's question, asked of ANN.
     Query("ann_ndcg", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       val q = emb.filter(col("id") < 10)
       val c = emb.filter(col("id") >= 10)
       val truth = Similarity.bruteForceTopK(q, c, 5)
@@ -154,8 +151,7 @@ private[graft] object SimilarityQueries {
     // mutuality = equi-join of the ranked list on its swapped key).
     Query("ann_reciprocal", (s, dir) =>
       Similarity.reciprocalTopK(
-        t(s, dir, "embeddings").filter(col("vec_id") % 4 === 0)
-          .select(col("vec_id").as("id"), col("embedding").as("vec")), 3),
+        embeddings(s, dir).filter(col("id") % 4 === 0), 3),
       Oracle("""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS x
         |    FROM embeddings WHERE vec_id % 4 = 0),
         |p AS (SELECT a.id AS aid, b.id AS bid,
@@ -174,8 +170,7 @@ private[graft] object SimilarityQueries {
         |WHERE k1.q < k1.n""".stripMargin)),
 
     Query("ann_ivf", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       Similarity.annTopKIvf(emb.filter(col("id") < 10),
         emb.filter(col("id") >= 10), 5)
     },
@@ -348,8 +343,7 @@ private[graft] object SimilarityQueries {
     // is |cells|-sized and broadcasts; the keep filter is a pure
     // projection.
     Query("cluster_mixture", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       val Seq(_, (_, assigns)) = Similarity.ivfIndexTables(emb)
       TextAnalysis.alphaMixture(
           assigns.select(col("nid"), col("cid")), col("cid"), col("nid"),
@@ -445,16 +439,10 @@ private[graft] object SimilarityQueries {
     // that). Only a centroid RETRAIN forces a full rebuild — that is a
     // new index version via [[Similarity.ivfPublish]].
     Query("ann_ivm", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val base = emb.filter(col("id") % 3 < 2)
+      val split = new IvmSplit(embeddings(s, dir), "id")
       val Seq((_, centroids), (_, assignments)) =
-        Similarity.ivfIndexTables(base)
-      val delta = emb.filter(col("id") % 3 === 2)
-        .withColumn("__op", lit(1))
-        .unionByName(base.filter(col("id") % 5 === 0)
-          .withColumn("__op", lit(-1)))
-      Similarity.ivfMaintainAssignments(assignments, delta, centroids,
+        Similarity.ivfIndexTables(split.base)
+      Similarity.ivfMaintainAssignments(assignments, split.delta, centroids,
           "__op")
         .groupBy(col("cid"))
         .agg(count(lit(1)).as("n_vecs"), sum(col("nid")).as("sum_id"))
@@ -492,8 +480,7 @@ private[graft] object SimilarityQueries {
     // ([[Similarity.annTopKIvfPq]]; recall pinned at IVF parity in
     // DedupSimilaritySpec).
     Query("ann_ivfpq", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       Similarity.annTopKIvfPq(emb.filter(col("id") < 10),
         emb.filter(col("id") >= 10), 5,
         nSub = 8, nCentroids = 128, rerank = 25)
@@ -505,8 +492,7 @@ private[graft] object SimilarityQueries {
     // 25-deep exact-cosine rerank ([[Similarity.annTopKSq8]] — codes
     // stream at 1/8 the bytes of raw doubles past the broadcast queries).
     Query("ann_sq8", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       Similarity.annTopKSq8FromCandidates(emb.filter(col("id") < 10),
         emb.filter(col("id") >= 10), 5, sq8CandTable(s, dir),
         rerank = Similarity.Sq8Rerank)
@@ -536,8 +522,7 @@ private[graft] object SimilarityQueries {
     // Σ 10⁶ DIV (60 + rank) — the compressed-vs-exact disagreement
     // diagnostic ([[Similarity.rrfFusion]]).
     Query("rank_fusion", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val emb = embeddings(s, dir)
       Similarity.rrfFusionFromCandidates(emb.filter(col("id") < 10),
         emb.filter(col("id") >= 10), 5, sq8CandTable(s, dir),
         kRrf = Similarity.RrfK)
@@ -574,8 +559,7 @@ private[graft] object SimilarityQueries {
     // micros ([[Similarity.pqCodes]]).
     Query("pq_codes", (s, dir) =>
       Similarity.pqCodes(
-        t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec")),
+        embeddings(s, dir),
         dim = 64, nSub = 4, nCentroids = 8),
       Oracle("""WITH base AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
         |   FROM embeddings),

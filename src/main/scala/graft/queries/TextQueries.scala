@@ -201,8 +201,7 @@ private[graft] object TextQueries {
     // label noise ([[Similarity.tripletMargins]] — anchors broadcast,
     // corpus streams once, collapses in the same pass).
     Query("triplet_margins", (s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"),
-        col("embedding").as("vec"), col("label"))
+      val emb = embeddings(s, dir, "label")
       Similarity.tripletMargins(emb.filter(col("id") % 5 === 0), emb)
     },
       Oracle("""WITH base AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v,

@@ -120,13 +120,6 @@ class MirroredGraphSink(spark: SparkSession, root: String,
 
   import org.apache.spark.sql.functions.col
 
-  /** `edgeTable` names arrive as `relType__labelA__labelB`
-    * ([[graft.pipeline.SyncDriver]]); recover the Cypher relation type. */
-  private def relOf(table: String, labelA: String, labelB: String): String = {
-    val suffix = s"__${labelA}__$labelB"
-    if (table.endsWith(suffix)) table.dropRight(suffix.length) else table
-  }
-
   def ensureIndexes(labels: Seq[String]): Unit =
     writer.runDdl(labels.map(CypherDialect.keyIndex))
 
@@ -151,18 +144,10 @@ class MirroredGraphSink(spark: SparkSession, root: String,
       CypherDialect.mergeNodes(label))
   }
 
-  override def mergeEdges(relType: String, edges: DataFrame, labelA: String,
-      labelB: String): Unit = {
-    writer.write(
-      resolveEndpoints(edges, labelA, labelB).dropDuplicates("a_id", "b_id"),
-      CypherDialect.mergeEdges(relOf(relType, labelA, labelB), labelA, labelB))
-    super.mergeEdges(relType, edges, labelA, labelB)
-  }
-
   override def applyEdgeDelta(relType: String, toCreate: DataFrame,
       deletePairs: DataFrame, labelA: String, labelB: String,
       alreadyResolved: Boolean = false): Unit = {
-    val rel = relOf(relType, labelA, labelB)
+    val rel = GraphSink.relTypeOf(relType, labelA, labelB)
     val resolved = (if (alreadyResolved) toCreate
       else resolveEndpoints(toCreate, labelA, labelB))
       .dropDuplicates("a_id", "b_id")

@@ -86,11 +86,11 @@ class GraphSink(spark: SparkSession, root: String) {
 
   /** J1 + K3 — resolve edges against endpoint node tables (inner joins ==
     * Cypher MATCH: dangling edges silently dropped, `neo4j.go:90-91`) and
-    * merge them into the edge table, one row per pair (MERGE idempotence). */
+    * merge them into the edge table, one row per pair (MERGE idempotence):
+    * [[applyEdgeDelta]] with no deletes. */
   def mergeEdges(relType: String, edges: DataFrame, labelA: String,
       labelB: String): Unit =
-    table("edges", relType).commit(replaceKeyed(readEdges(relType), pairKey,
-      resolveEndpoints(edges, labelA, labelB).select("a_id", "b_id"), noEdges))
+    applyEdgeDelta(relType, edges, noEdges, labelA, labelB)
 
   /** One transaction applying resolved pair creates and pair-keyed deletes
     * to the edge table: a reconciled relation's delta (the engine's
@@ -125,10 +125,31 @@ class GraphSink(spark: SparkSession, root: String) {
 
 object GraphSink {
 
+  /** The edge table of relation type `relType` between `labelA` and
+    * `labelB` nodes. The reference's single `has` type spans three
+    * endpoint pairs that Neo4j distinguishes structurally; a flat table
+    * must distinguish them by name. */
+  private[graft] def edgeTable(relType: String, labelA: String,
+      labelB: String): String =
+    s"${relType}__${labelA}__$labelB"
+
+  /** The relation type of an [[edgeTable]] name (a name in no other form
+    * is its own type). */
+  private[graft] def relTypeOf(table: String, labelA: String,
+      labelB: String): String = {
+    val suffix = s"__${labelA}__$labelB"
+    if (table.endsWith(suffix)) table.dropRight(suffix.length) else table
+  }
+
   /** Separator of [[pairKey]]: a control character no id contains. */
-  private[graft] val PairSep = "\u0001"
+  private val PairSep = "\u0001"
 
   /** An edge's (a_id, b_id) as one string: the key a reconciled relation's
     * state records, and the key of every edge write. */
   private[graft] val pairKey: Column = concat_ws(PairSep, col("a_id"), col("b_id"))
+
+  /** The (a_id, b_id) columns of a [[pairKey]] column. */
+  private[graft] def pairOf(key: Column): Seq[Column] = Seq(
+    element_at(split(key, PairSep), 1).as("a_id"),
+    element_at(split(key, PairSep), 2).as("b_id"))
 }

@@ -23,8 +23,7 @@ object AnnRecallLab {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.GraftSession.build(sfDir, cpus)
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = graft.SparkEntry.embeddings(spark, sfDir)
     val cut = emb.select(col("id")).orderBy(col("id")).limit(nQ)
       .agg(max(col("id"))).head().getLong(0)
     val q = emb.filter(col("id") <= cut).localCheckpoint()
